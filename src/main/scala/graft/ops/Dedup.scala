@@ -322,7 +322,7 @@ object Dedup {
 
   /** Large-star: every node links its LARGER neighbors to the minimum
     * of its neighborhood (including itself). */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
+  private def largeStar(e: DataFrame): DataFrame = {
     val nbrs = e.select(col("lo").as("u"), col("hi").as("v"))
       .union(e.select(col("hi").as("u"), col("lo").as("v")))
     val mins = nbrs.groupBy("u").agg(min(col("v")).as("mn"))
@@ -335,7 +335,7 @@ object Dedup {
 
   /** Small-star: every node links its SMALLER neighbors (and itself) to
     * the minimum of those neighbors. */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
+  private def smallStar(e: DataFrame): DataFrame = {
     val d = e.select(col("hi").as("u"), col("lo").as("v"))
     val mins = d.groupBy("u").agg(min(col("v")).as("m"))
     d.join(mins, "u")

@@ -28,7 +28,7 @@ object Similarity {
     * of a full per-query window SORT of all N (`row_number` over a
     * window was the round-4 shape; at web scale the window sort is a
     * per-query shuffle-and-sort of every probed candidate). */
-  private[graft] final class TopKAgg(k: Int)
+  private final class TopKAgg(k: Int)
       extends Aggregator[ScoredId, Seq[ScoredId], Seq[ScoredId]] {
     // buffer invariant: always sorted by (cos desc, vecId asc), length
     // ≤ k — so reduce is a binary-search O(k) array insert (not a full

@@ -6,16 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, IndexTables}
 import graft.index.codec.VarbyteFunctions._
 
-/** Query execution over the compressed index, declarative DataFrame path.
+/** Query execution over the compressed index: boolean doc sets, the
+  * all-document BM25 scorer, the span ranker, and [[search]].
   *
-  * Role split at cluster scale: THIS path is the transparent,
-  * oracle-verifiable formulation — its BM25 scoring joins the docs table
-  * for docLen, which at 10^12 docs is a real shuffle per query.
-  * [[Wand]] is the serving path: docLen comes from the bucket-local
-  * norms blob, so a query touches only its terms' rows plus one norms
-  * row per bucket and shuffles only per-bucket top-k hits. Both paths
-  * are rank-identical by construction (same idf/tfNorm arithmetic,
-  * sorted-term summation) and the parity suite asserts it.
+  * Ranked BM25 top-k has ONE executor, [[Wand]]: [[search]] hands every
+  * scorer except "span" to `Wand.search`, where docLen comes from the
+  * bucket-local norms blob, so a query touches only its terms' rows plus
+  * one norms row per bucket and shuffles only per-bucket top-k hits.
+  * [[bm25Scores]] scores EVERY matching doc (no top-k cut) for the
+  * SparkEntry queries that need all scores; it joins the docs table for
+  * docLen and uses the same idf/tfNorm arithmetic and sorted-term
+  * summation, so both agree bit-for-bit with the scalar oracle.
   *
   * The reference's ISR algebra (`/root/reference/src/isr/isr.h`) is
   * re-expressed at docId level: Word → postings scan, And → docId
@@ -33,8 +34,8 @@ object Engine {
     * documented chosen constants). */
   def idf(nDocs: Long, df: Long): Double =
     // StrictMath, not Math: Catalyst's `log` expression evaluates via
-    // StrictMath, and WAND (this fn) must be bit-identical to the
-    // DataFrame scoring path
+    // StrictMath, and WAND (this fn) must be bit-identical to
+    // [[bm25Scores]]
     StrictMath.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
 
   /** Decoded postings (term, docId, tf) for `terms`. */
@@ -90,22 +91,20 @@ object Engine {
 
   /** Sorted-array phrase adjacency: exists p in pos(0) with p+i in pos(i)
     * for all i (reference ISRPhrase retry loop, `isr.h:303-410`,
-    * re-expressed per-document). */
-  def phraseMatches(posArrays: Seq[Seq[Long]]): Boolean = {
-    if (posArrays.isEmpty || posArrays.exists(_ == null)) return false
-    val first = posArrays.head
-    first.exists { p =>
+    * re-expressed per-document) — the one rule behind both the
+    * DataFrame phrase doc set and WAND's phrase constraint. */
+  def phraseMatches(posArrays: Seq[Array[Long]]): Boolean =
+    posArrays.nonEmpty && posArrays.head.exists { p =>
       var i = 1
       var ok = true
       while (ok && i < posArrays.length) {
-        // arrays are sorted; small per-doc sizes → contains is fine
-        ok = posArrays(i).contains(p + i)
+        ok = java.util.Arrays.binarySearch(posArrays(i), p + i) >= 0
         i += 1
       }
       ok
     }
-  }
-  private val phraseMatchUdf = udf(phraseMatches _)
+  private val phraseMatchUdf = udf((posArrays: Seq[Seq[Long]]) =>
+    !posArrays.contains(null) && phraseMatches(posArrays.map(_.toArray)))
 
   private def phraseDocs(ix: IndexTables, ts: Seq[String],
       field: String): DataFrame = {
@@ -187,44 +186,6 @@ object Engine {
         lit(0.0), (acc, x) => acc + x.getField("contrib")).as("score"))
   }
 
-  /** Flattened plain-term list when `expr` is a pure conjunction of
-    * single terms (the reference's default query shape) — the fused-path
-    * eligibility test. */
-  def plainConjunction(expr: QueryExpr): Option[Seq[String]] = expr match {
-    case Term(t)    => Some(Seq(t))
-    case And(l, r)  =>
-      for { a <- plainConjunction(l); b <- plainConjunction(r) } yield a ++ b
-    case SeqAnd(cs) =>
-      cs.foldLeft(Option(Seq.empty[String])) { (acc, c) =>
-        for { a <- acc; b <- plainConjunction(c) } yield a ++ b
-      }
-    case _ => None
-  }
-
-  /** Fused conjunctive BM25: one postings scan, one shuffle — the
-    * count-match pattern (SURVEY.md §2.5 I4). Matching docs (those
-    * containing ALL terms) and their scores come out of a single
-    * groupBy(docId), replacing the docSet-join + separate scoring scan.
-    * Rank-identical to bm25Scores ⋈ docSet: same per-term contributions,
-    * same sorted-term summation order. */
-  def bm25ConjunctiveScores(ix: IndexTables, terms: Seq[String],
-      field: String = "body"): DataFrame = {
-    val ts = terms.distinct.sorted
-    val post = postingsFor(ix, ts, field)
-      .join(ix.docs.select(col("docId"), col("docLen")), "docId")
-      .join(broadcast(idfPlan(ix, ts, field)), "term")
-      .withColumn("contrib", col("idf") *
-        IndexBuilder.tfNorm(col("tf"), col("docLen"), ix.stats.avgDocLen, ix.config))
-    post.groupBy(col("docId"))
-      .agg(
-        aggregate(
-          sort_array(collect_list(struct(col("term"), col("contrib")))),
-          lit(0.0), (acc, x) => acc + x.getField("contrib")).as("score"),
-        count(lit(1)).as("nTerms")) // (term, docId) rows are unique
-      .filter(col("nTerms") === ts.size)
-      .select(col("docId"), col("score"))
-  }
-
   /** Document frequencies for query terms (tiny driver-side collect from
     * the termStats table — the reference reads df from the posting-list
     * header the same way, `IndexFileReader.h:383-388`). */
@@ -278,18 +239,9 @@ object Engine {
       spanScoreUdf(arr("m_body"), arr("m_path")).as("spanScore"))
   }
 
-  /** Search results as JSON lines — the reference's HTTP API response
-    * shape (`/root/reference/FrontEnd/engine.cpp:133-155`:
-    * `{results: [{url, rank}...]}` per-hit records; here one JSON object
-    * per hit with repo/path standing in for url). */
-  def searchJson(ix: IndexTables, query: String, k: Int = 32,
-      scorer: String = "bm25"): org.apache.spark.sql.Dataset[String] =
-    search(ix, query, k, scorer).toJSON
-
   /** The (docId, score, repo, path) result schema with zero rows — the
-    * no-parse answer of BOTH serving paths ([[search]] and
-    * `Wand.search`), shared so their schemas cannot drift in the one
-    * case the parity suite never exercises. */
+    * no-parse answer of both ranked scorers (span here, BM25 in
+    * `Wand.search`), shared so their schemas cannot drift. */
   private[query] def emptyResults(
       spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.emptyDataFrame
@@ -298,51 +250,38 @@ object Engine {
       .limit(0)
 
   /** Full ranked search: parse → boolean match → score → top-k → join
-    * docs. Scorer "bm25" (flagship) or "span" (reference parity;
-    * span + path score, `constraint_solver.h:464-490`). */
+    * docs. Scorer "span" (reference parity; span + path score,
+    * `constraint_solver.h:464-490`) runs here; every other scorer name
+    * is BM25 and runs on the one top-k executor, `Wand.search`. */
   def search(ix: IndexTables, query: String, k: Int = 32,
-      scorer: String = "bm25"): DataFrame = {
-    val spark = ix.index.sparkSession
-    QueryParser.parse(query) match {
-      case None => emptyResults(spark) // full schema, no-parse case
+      scorer: String = "bm25"): DataFrame =
+    if (scorer != "span") Wand.search(ix, query, k)
+    else QueryParser.parse(query) match {
+      case None => emptyResults(ix.index.sparkSession) // no-parse case
       case Some(expr) =>
-        val terms = expr.terms
-        lazy val cands = docSet(ix, expr)
-        val scored = scorer match {
-          case "span" =>
-            // reference gate (`constraint_solver.h:455-456`): single-term
-            // queries score only docs whose url is < 64 chars. Mapping
-            // note: the gate uses length(path) ALONE as the full-url
-            // analog — in this corpus `path` = "repo/lang/docId" already
-            // embeds the repo, so it is the complete url string (UrlScore
-            // maps host=repo / path=path for its separate host-vs-path
-            // tiers; the two mappings are deliberately different and the
-            // BruteForce oracle mirrors both). Applied BEFORE span
-            // scoring so gated-out candidates never pay the positional
-            // decode + span UDF.
-            val gated =
-              if (expr.termGroups.flatten.size > 1) cands
-              else cands.join(
-                ix.docs.filter(length(col("path")) < 64).select(col("docId")),
-                "docId")
-            spanScores(ix, gated, terms)
-              .join(ix.docs.select(col("docId"), col("repo"), col("path")),
-                "docId")
-              .withColumn("score", col("spanScore") +
-                UrlScore.scoreCol(col("repo"), col("path"), expr.termGroups))
-              .select(col("docId"), col("score"))
-          case _ =>
-            plainConjunction(expr) match {
-              case Some(ts) => bm25ConjunctiveScores(ix, ts)
-              case None     => bm25Scores(ix, terms).join(cands, "docId")
-            }
-        }
-        scored
-          .orderBy(col("score").desc, col("docId").asc)
-          .limit(k)
-          .join(ix.docs.select(col("docId"), col("repo"), col("path")), "docId")
+        val cands = docSet(ix, expr)
+        // reference gate (`constraint_solver.h:455-456`): single-term
+        // queries score only docs whose url is < 64 chars. Mapping
+        // note: the gate uses length(path) ALONE as the full-url
+        // analog — in this corpus `path` = "repo/lang/docId" already
+        // embeds the repo, so it is the complete url string (UrlScore
+        // maps host=repo / path=path for its separate host-vs-path
+        // tiers; the two mappings are deliberately different and the
+        // BruteForce oracle mirrors both). Applied BEFORE span
+        // scoring so gated-out candidates never pay the positional
+        // decode + span UDF.
+        val gated =
+          if (expr.termGroups.flatten.size > 1) cands
+          else cands.join(
+            ix.docs.filter(length(col("path")) < 64).select(col("docId")),
+            "docId")
+        spanScores(ix, gated, expr.terms)
+          .join(ix.docs.select(col("docId"), col("repo"), col("path")),
+            "docId")
+          .withColumn("score", col("spanScore") +
+            UrlScore.scoreCol(col("repo"), col("path"), expr.termGroups))
           .select(col("docId"), col("score"), col("repo"), col("path"))
           .orderBy(col("score").desc, col("docId").asc)
+          .limit(k)
     }
-  }
 }

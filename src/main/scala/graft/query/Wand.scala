@@ -35,10 +35,12 @@ import graft.index.IndexTables
   * traded away for embarrassing parallelism.
   *
   * Scores are exact BM25 (tf from blob, docLen from the bucket's norms
-  * row) over the POSITIVE terms present in the doc — identical
-  * arithmetic to [[Engine.bm25Scores]], summed in sorted-term order, so
-  * DataFrame path and WAND path are rank-identical (asserted by the
-  * serving-parity suite).
+  * row) over the POSITIVE terms present in the doc, summed in
+  * sorted-term order — the same arithmetic as the all-document scorer
+  * [[Engine.bm25Scores]] and the scalar oracle, so ranked top-k is
+  * rank-identical to both (asserted by the parity suite). This is the
+  * one ranked-BM25 top-k executor: [[Engine.search]] and every serving
+  * scorer name except "span" answer through [[search]].
   */
 object Wand {
 
@@ -140,19 +142,15 @@ object Wand {
       idf * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * docLen / avgdl)))
   }
 
-  /** Bounded top-k accumulator with (score desc, docId asc) order.
-    * `floor` pre-seeds the pruning threshold (two-phase cross-bucket
-    * sharing, [[topKTwoPhase]]): a doc scoring under the floor can
-    * never reach the global top-k, so it prunes like a full heap even
-    * while this bucket's heap is empty. */
-  private final class TopK(k: Int, floor: Double = Double.NegativeInfinity) {
+  /** Bounded top-k accumulator with (score desc, docId asc) order. */
+  private final class TopK(k: Int) {
     // min-heap on (score asc, docId desc) so the root is the weakest hit
     private val ord = Ordering.by[(Double, Long), (Double, Long)] {
       case (s, d) => (-s, d)
     }
     private val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord)
     def threshold: Double =
-      if (heap.size < k) floor else math.max(floor, heap.head._1)
+      if (heap.size < k) Double.NegativeInfinity else heap.head._1
     def offer(score: Double, docId: Long): Unit = {
       if (heap.size < k) heap.enqueue((score, docId))
       else {
@@ -177,7 +175,7 @@ object Wand {
     * cursors themselves: at evaluation time they all sit at >= pivot,
     * so "parked on the pivot" IS the membership test (seek no-ops).
     * Phrases decode positions ONLY for the pivot posting of each member
-    * term (lazy positional decode, like the DataFrame path). */
+    * term (lazy positional decode). */
   private final class ConstraintEval(expr: QueryExpr,
       cursorOf: Map[String, Cursor]) {
     val required: Set[String] = expr.requiredTerms
@@ -188,21 +186,9 @@ object Wand {
         case None    => false
       }
 
-    /** Adjacency over sorted position arrays: some p in pos(0) with
-      * p+i in pos(i) for all i — same rule as [[Engine.phraseMatches]]. */
-    private def phraseAt(ts: Seq[String], doc: Long): Boolean = {
-      if (!ts.forall(present(_, doc))) return false
-      val arrays = ts.map(t => cursorOf(t).positionsHere)
-      arrays.head.exists { p =>
-        var i = 1
-        var ok = true
-        while (ok && i < arrays.length) {
-          ok = java.util.Arrays.binarySearch(arrays(i), p + i) >= 0
-          i += 1
-        }
-        ok
-      }
-    }
+    private def phraseAt(ts: Seq[String], doc: Long): Boolean =
+      ts.forall(present(_, doc)) &&
+        Engine.phraseMatches(ts.map(t => cursorOf(t).positionsHere))
 
     private def eval(e: QueryExpr, doc: Long): Boolean = e match {
       case Term(t)      => present(t, doc)
@@ -335,11 +321,9 @@ object Wand {
     run(ix, terms.distinct.sorted, None, k, field, dfs)
 
   /** Constraint-aware top-k: candidates must satisfy the full boolean
-    * expression (AND / OR / NOT / phrase / parens) and are then scored
-    * with disjunctive BM25 over the positive terms they contain — the
-    * exact semantics of [[Engine.search]]'s bm25 path, so the serving
-    * path and the flagship DataFrame path answer the same query with
-    * the same doc set and bit-identical scores. */
+    * expression (AND / OR / NOT / phrase / parens) — the doc set of
+    * [[Engine.docSet]] — and are then scored with disjunctive BM25 over
+    * the positive terms they contain. */
   def topKExpr(ix: IndexTables, expr: QueryExpr, k: Int = 32,
       field: String = "body",
       dfs: Option[DfDict] = None): DataFrame = {
@@ -351,9 +335,9 @@ object Wand {
     else run(ix, scoring, Some(expr), k, field, dfs)
   }
 
-  /** Full ranked serving-path search: parse → constraint-aware WAND →
-    * join docs — the same output shape and ordering as
-    * [[Engine.search]] (scorer "bm25"). */
+  /** Full ranked BM25 search: parse → constraint-aware WAND → join
+    * docs; (docId, score, repo, path) in (score desc, docId asc) order,
+    * the shape every scorer of [[Engine.search]] returns. */
   def search(ix: IndexTables, query: String, k: Int = 32,
       dfs: Option[DfDict] = None): DataFrame = {
     val spark = ix.index.sparkSession
@@ -368,49 +352,17 @@ object Wand {
     }
   }
 
-  /** EXPERIMENT (documented trade in the header): two-phase cross-bucket
-    * threshold sharing. Phase 1 runs plain WAND over ONE bucket (the
-    * lowest bucket id holding any scoring term) and takes its k-th
-    * score — a sound global floor, since the global k-th best is ≥ any
-    * bucket's k-th best; phase 2 broadcasts that floor so every bucket
-    * starts pruning immediately instead of warming its own empty heap.
-    * Results are identical to [[topK]]; the question is wall-clock —
-    * phase 1 serializes one extra collect per query. Measured by
-    * `graft.tools.WandExperiment`; see BASELINE.md for the verdict. */
-  def topKTwoPhase(ix: IndexTables, terms: Seq[String], k: Int = 32,
-      field: String = "body",
-      dfs: Option[DfDict] = None): DataFrame = {
-    val scoring = terms.distinct.sorted
-    val seedBucket = ix.index
-      .filter(col("field") === field && col("term").isin(scoring: _*))
-      .agg(min(col("bucket"))).head()
-    if (seedBucket.isNullAt(0)) run(ix, scoring, None, k, field, dfs)
-    else {
-      val phase1 = run(ix, scoring, None, k, field, dfs,
-          onlyBucket = Some(seedBucket.getLong(0)))
-        .select(col("score")).collect()
-      // the bucket's k-th best bounds the global k-th best ONLY when the
-      // bucket actually produced k hits; a short bucket seeds nothing
-      val floor =
-        if (phase1.length == k) phase1.map(_.getDouble(0)).min
-        else Double.NegativeInfinity
-      run(ix, scoring, None, k, field, dfs, seedThreshold = floor)
-    }
-  }
-
   /** Corpus size at which the norms-side bucket semi-join pays for its
     * extra broadcast-subquery job (see the plan note in [[run]]).
-    * Overridable system property so tests can force either plan shape
-    * and the interleaved experiment can measure both in one JVM. */
+    * Overridable system property so tests can force either plan
+    * shape. */
   private def normsPruneMinDocs: Long =
     sys.props.get("graft.wand.normsPruneMinDocs").flatMap(_.toLongOption)
       .getOrElse(1L << 20)
 
   private def run(ix: IndexTables, scoring: Seq[String],
       exprOpt: Option[QueryExpr], k: Int, field: String,
-      dfDict: Option[DfDict] = None,
-      onlyBucket: Option[Long] = None,
-      seedThreshold: Double = Double.NegativeInfinity): DataFrame = {
+      dfDict: Option[DfDict] = None): DataFrame = {
     val spark = ix.index.sparkSession
     import spark.implicits._
     val scoringSet = scoring.toSet
@@ -444,11 +396,8 @@ object Wand {
         lit(null).cast("array<binary>")
       else
         when(col("term").isin(phraseTerms: _*), col("positions"))
-    val bucketPred = onlyBucket
-      .map(b => col("bucket") === b).getOrElse(lit(true))
     val rows = ix.index
-      .filter(col("field") === field && col("term").isin(allTs: _*) &&
-        bucketPred)
+      .filter(col("field") === field && col("term").isin(allTs: _*))
       .select(col("term"), col("bucket"), col("n"), col("docIds"), col("tfs"),
         posCol.as("positions"),
         transform(col("blocks"), x => x.getField("blockMax")).as("blockMaxes"),
@@ -463,14 +412,12 @@ object Wand {
     // shuffle per query). The term-filtered rows' distinct bucket set
     // is small (≤ one per posting row), so it broadcasts and the norms
     // side becomes a shuffle-free broadcast semi-join; result-identical
-    // by construction. onlyBucket inherits automatically: rows is
-    // already bucketPred-filtered, so phase-1 seeding touches one
-    // norms row instead of all of them.
+    // by construction.
     //
-    // The trade inverts with corpus size (measured — see
-    // `graft.tools.NormsPruneExperiment` / BASELINE.md): the semi-join
+    // The trade inverts with corpus size (measured in an interleaved
+    // A/B, recorded in BASELINE.md): the semi-join
     // costs one extra broadcast-subquery job per query, so below
-    // `NormsPruneMinDocs` the whole norms table is cheaper to cogroup
+    // `normsPruneMinDocs` the whole norms table is cheaper to cogroup
     // than the job is to schedule. Driver-side stat-based plan choice,
     // the cost-based-optimizer move, on a statistic (`stats.nDocs`)
     // already in hand.
@@ -520,7 +467,7 @@ object Wand {
                   .map(r => r.term -> mkCursor(r)).toMap
               new ConstraintEval(e, byTerm)
             }
-            val topK = new TopK(k, seedThreshold)
+            val topK = new TopK(k)
             bucketTopK(cursors, matcher, docLenAt, topK)
             topK.drain()
         }

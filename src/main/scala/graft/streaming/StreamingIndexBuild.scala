@@ -58,21 +58,14 @@ object StreamingIndexBuild {
     * the same salt chain back to its original id (same-identity registry
     * hits never bump). `hashAt` is injectable so tests can plant dense
     * collisions with a coarse hash; `maxSalt` bounds the loop — a loud
-    * failure after 8 deterministic retries, not a silent merge. */
+    * failure after 8 deterministic retries, not a silent merge.
+    *
+    * Returns the resolved frame and its unpersist hook: the final
+    * round is ALWAYS cached (the returned plan reads it), so the caller
+    * must call `cleanup()` after every sink that consumes the frame has
+    * completed, or each call leaks one cached frame for the life of
+    * the process. */
   def resolveDocIds(batch: DataFrame,
-      prior: Option[DataFrame],
-      hashAt: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        saltedDocId,
-      maxSalt: Int = 8): DataFrame =
-    resolveDocIdsWithCleanup(batch, prior, hashAt, maxSalt)._1
-
-  /** [[resolveDocIds]] plus an unpersist hook: when rehash rounds ran,
-    * the final round stays cached because the returned plan reads it —
-    * a long-running streaming job must release it once its sinks are
-    * done, or every collision-bearing batch leaks one cached frame for
-    * the life of the process. Call `cleanup()` after EVERY sink that
-    * consumes the result has completed. */
-  def resolveDocIdsWithCleanup(batch: DataFrame,
       prior: Option[DataFrame],
       hashAt: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         saltedDocId,
@@ -180,8 +173,7 @@ object StreamingIndexBuild {
             .filter(col("seg").cast("string") =!= s"stream-$batchId")
             .select(col("docId"), col("repo").as("pRepo"),
               col("path").as("pPath"), col("commit").as("pCommit")))
-        val (resolved, resolveCleanup) =
-          resolveDocIdsWithCleanup(batch, prior)
+        val (resolved, resolveCleanup) = resolveDocIds(batch, prior)
         // cross-batch re-ingest: a doc already in the registry resolves
         // to its original docId (same identity never bumps) and is
         // dropped here; genuinely new docs never match a registry id
@@ -237,7 +229,7 @@ object StreamingIndexBuild {
             s""""status":"done"}""")
         } finally {
           withIds.unpersist()
-          resolveCleanup() // release any cached rehash-round frame
+          resolveCleanup() // release the cached final resolve round
         }
         ()
       }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
-
 import org.apache.spark.sql.SparkSession
 
 import graft.query.{Engine, Wand}
@@ -14,20 +12,14 @@ import graft.query.{Engine, Wand}
   * not cold builds or first-collect JIT.
   *
   * Modes:
-  *   `serve <sfDir>`            — REPL: one query per stdin line, JSON
-  *                                hits per line (reference response
-  *                                shape, `engine.cpp:133-155`)
-  *   `http <sfDir> [port] [scorer]`
+  *   `http <sfDir> [port] [scorer]` (default)
   *                              — the reference's HTTP API
   *                                (`GET /api/search?q=...&k=32
   *                                [&scorer=wand|bm25|span]` and
   *                                `GET /api/snippets?ids=...`)
-  *   `bench <sfDir> [threads] [secs] [scorer]`
-  *                              — closed-loop concurrent load over the
-  *                                reference query set; prints one JSON
-  *                                line with p50/p95/p99, qps, errors.
-  *                                scorer: wand (serving path, default)
-  *                                or bm25 (DataFrame path).
+  *   `serve <sfDir> [scorer]`   — REPL: one query per stdin line, JSON
+  *                                hits per line (reference response
+  *                                shape, `engine.cpp:133-155`)
   */
 object Serve {
 
@@ -54,15 +46,16 @@ object Serve {
       case c => c.toString
     }
 
-  /** One query, any scorer. "wand" is the serving path
-    * (constraint-aware block-max WAND — same doc set and scores as the
-    * bm25 DataFrame path); "bm25"/"span" are the DataFrame paths. An
-    * unknown scorer is a CLIENT error (400), not a MatchError 500. */
+  /** One query, any scorer, as JSON hit objects. "wand" and "bm25" are
+    * two names for the same BM25 ranking on the one top-k executor
+    * (constraint-aware block-max WAND); "span" is the reference-parity
+    * span ranker. An unknown scorer is a CLIENT error (400), not a
+    * MatchError 500. */
   def searchJson(ix: graft.index.IndexTables, q: String, k: Int,
       scorer: String,
       dfs: Option[Wand.DfDict] = None): Array[String] = scorer match {
-    case "wand"           => Wand.search(ix, q, k, dfs).toJSON.collect()
-    case "bm25" | "span"  => Engine.searchJson(ix, q, k, scorer).collect()
+    case "wand" | "bm25" => Wand.search(ix, q, k, dfs).toJSON.collect()
+    case "span"          => Engine.search(ix, q, k, "span").toJSON.collect()
     case other => throw new BadRequest(
       s"unknown scorer '$other' (expected one of ${Scorers.mkString("|")})")
   }
@@ -144,14 +137,10 @@ object Serve {
   }
 
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("bench")
+    val mode = args.headOption.getOrElse("http")
+    require(mode == "http" || mode == "serve",
+      s"unknown mode '$mode' (expected http|serve)")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    // bench-mode args: bench <sfDir> [threads] [secs] [scorer]
-    // http-mode args:  http  <sfDir> [port] [scorer] — lazy, because in
-    // http mode arg 3 is the SCORER NAME and an eager toInt here would
-    // crash startup before checkScorer ever sees it
-    lazy val threads = args.lift(2).map(_.toInt).getOrElse(4)
-    lazy val secs = args.lift(3).map(_.toInt).getOrElse(30)
     // operator-supplied scorer names fail AT STARTUP: a typo'd default
     // must not boot a server that then 400s every scorer-less request
     // (blaming clients for the operator's config — the BadRequest
@@ -161,7 +150,9 @@ object Serve {
         s"unknown scorer '$s' (expected one of ${Scorers.mkString("|")})")
       s
     }
-    val scorer = checkScorer(args.lift(4).getOrElse("wand"))
+    // http <sfDir> [port] [scorer]; serve <sfDir> [scorer]
+    val scorer = checkScorer(
+      args.lift(if (mode == "serve") 2 else 3).getOrElse("wand"))
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -190,31 +181,13 @@ object Serve {
       .flatMap(_.toIntOption).getOrElse(1000000)
     val dfDict = Some(Wand.dfDictionary(ix, maxTerms = dfDictMax))
 
-    def answer(q: String): Array[org.apache.spark.sql.Row] = scorer match {
-      case "bm25" => Engine.search(ix, q, 32).collect()
-      case "span" => Engine.search(ix, q, 32, "span").collect()
-      case _      => Wand.search(ix, q, 32, dfDict).collect()
-    }
-
-    // JIT + plan-cache warm-up before anything is timed or served: BOTH
-    // query paths (an http client can pick either via ?scorer=) plus
-    // the snippets route — nothing cold on the first real request
-    QuerySet.foreach { q =>
-      Wand.search(ix, q, 32, dfDict).collect()
-      Engine.search(ix, q, 32).collect()
-    }
+    // JIT + plan-cache warm-up before anything is served: each query
+    // once through the BM25 executor, plus the snippets route —
+    // nothing cold on the first real request
+    QuerySet.foreach(q => searchJson(ix, q, 32, "wand", dfDict))
     snippetsJson(corpus, Seq(0L))
 
     mode match {
-      case "http" => // args: http <sfDir> [port] [scorer]
-        val defaultScorer = checkScorer(args.lift(3).getOrElse("wand"))
-        val server = startHttp(ix, corpus,
-          args.lift(2).map(_.toInt).getOrElse(8080), defaultScorer, dfDict)
-        System.err.println(
-          s"graft-serve http on port ${server.getAddress.getPort} " +
-            s"(default scorer=$defaultScorer)")
-        Thread.currentThread.join() // serve until killed
-
       case "serve" =>
         System.err.println(s"graft-serve ready on $sfDir (scorer=$scorer)")
         Iterator.continually(scala.io.StdIn.readLine())
@@ -222,44 +195,19 @@ object Serve {
           .filter(_.trim.nonEmpty)
           .foreach { q =>
             val t0 = System.nanoTime()
-            val json = Engine.searchJson(ix, q, 32).collect()
+            val json = searchJson(ix, q, 32, scorer, dfDict)
             val ms = (System.nanoTime() - t0) / 1e6
             json.foreach(println)
             System.err.println(f"[$ms%.1f ms] ${json.length} hits")
           }
 
-      case _ => // bench: closed-loop concurrent clients
-        val lat = new ConcurrentLinkedQueue[java.lang.Double]()
-        val errors = new java.util.concurrent.atomic.AtomicLong()
-        val deadline = System.nanoTime() + secs.toLong * 1000000000L
-        val pool = Executors.newFixedThreadPool(threads)
-        val done = new CountDownLatch(threads)
-        (0 until threads).foreach { t =>
-          pool.submit(new Runnable {
-            def run(): Unit = {
-              var i = t // stagger the per-thread query rotation
-              try {
-                while (System.nanoTime() < deadline) {
-                  val q = QuerySet(i % QuerySet.size)
-                  val t0 = System.nanoTime()
-                  try {
-                    answer(q)
-                    lat.add((System.nanoTime() - t0) / 1e9)
-                  } catch { case _: Throwable => errors.incrementAndGet() }
-                  i += 1
-                }
-              } finally done.countDown()
-            }
-          })
-        }
-        done.await(secs.toLong + 120L, TimeUnit.SECONDS)
-        pool.shutdownNow()
-        import scala.jdk.CollectionConverters._
-        val xs = lat.asScala.map(_.doubleValue).toIndexedSeq.sorted
-        def p(q: Double): Double =
-          if (xs.isEmpty) -1 else xs((q * (xs.size - 1)).round.toInt)
-        println(
-          f"""{"mode":"serve-bench","sf":"$sfDir","scorer":"$scorer","threads":$threads,"secs":$secs,"queries":${xs.size},"qps":${xs.size.toDouble / secs}%.2f,"p50Sec":${p(0.5)}%.4f,"p95Sec":${p(0.95)}%.4f,"p99Sec":${p(0.99)}%.4f,"errors":${errors.get()}}""")
+      case _ =>
+        val server = startHttp(ix, corpus,
+          args.lift(2).map(_.toInt).getOrElse(8080), scorer, dfDict)
+        System.err.println(
+          s"graft-serve http on port ${server.getAddress.getPort} " +
+            s"(default scorer=$scorer)")
+        Thread.currentThread.join() // serve until killed
     }
     spark.stop()
   }

@@ -36,9 +36,8 @@ object Smoke {
       Engine.search(ix, q, 5).show(truncate = false)
     }
 
-    println("=== WAND top-5 for [computer, science] vs DataFrame BM25:")
+    println("=== disjunctive WAND top-5 for [computer, science]:")
     Wand.topK(ix, Seq("computer", "science"), 5).show(false)
-    Engine.search(ix, "computer science", 5, "bm25").show(false)
 
     println("=== span scorer top-5:")
     Engine.search(ix, "computer science", 5, "span").show(false)

@@ -34,6 +34,17 @@ class EngineParitySpec extends SparkSpec {
     df.select("docId", "score").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
+  /** `got` ranks the same docs in the same order as the oracle's bm25
+    * top-32 for `q`, each score within 1e-9. */
+  def assertOracleRank(got: Seq[(Long, Double)], q: String,
+      what: String): Unit = {
+    val want = oracle.search(q, 32, "bm25")
+    assert(got.map(_._1) == want.map(_.docId), s"$what rank for '$q'")
+    got.zip(want).foreach { case ((_, gs), w) =>
+      assert(math.abs(gs - w.score) < 1e-9, s"$what score for '$q'")
+    }
+  }
+
   test("randomized query fuzz: BM25 and span rank-identical to oracle") {
     // 20 random 1-3 term queries drawn from the corpus vocabulary
     // (seeded — reproducible); every one must be rank- AND score-
@@ -111,14 +122,8 @@ class EngineParitySpec extends SparkSpec {
   }
 
   test("BM25 top-k rank-identical to oracle on the reference query set") {
-    QuerySet.foreach { q =>
-      val got = hits(Engine.search(ix, q, 32, "bm25"))
-      val want = oracle.search(q, 32, "bm25")
-      assert(got.map(_._1) == want.map(_.docId), s"rank order for '$q'")
-      got.zip(want).foreach { case ((_, gs), w) =>
-        assert(math.abs(gs - w.score) < 1e-9, s"score drift for '$q'")
-      }
-    }
+    QuerySet.foreach(q =>
+      assertOracleRank(hits(Engine.search(ix, q, 32, "bm25")), q, "bm25"))
   }
 
   test("span ranker rank-identical to oracle") {
@@ -147,10 +152,10 @@ class EngineParitySpec extends SparkSpec {
 
   test("constraint-aware WAND serving path == Engine.search on boolean queries") {
     // the round-2 gap: the serving path answered NOT/phrase/multi-term
-    // queries with bag-of-words semantics while the flagship path was
-    // conjunctive. topKExpr must now produce the SAME doc set and
-    // bit-identical scores as the DataFrame bm25 path on the reference
-    // query set PLUS NOT / phrase / paren / mixed queries.
+    // queries with bag-of-words semantics. topKExpr must produce the
+    // oracle's doc set, order and scores on the reference query set
+    // PLUS NOT / phrase / paren / mixed queries, and Engine.search must
+    // return exactly that ranking.
     val qs = QuerySet ++ Seq(
       "hash table NOT rareterm00001",
       "computer NOT science",
@@ -160,17 +165,12 @@ class EngineParitySpec extends SparkSpec {
       "state AND \"the machine\"",
       "hash NOT \"computer science\"")
     qs.foreach { q =>
-      val expr = QueryParser.parse(q).get
-      val got = hits(Wand.topKExpr(ix, expr, 32))
-      val want = hits(Engine.search(ix, q, 32, "bm25"))
-      assert(got.map(_._1) == want.map(_._1), s"serving rank for '$q'")
-      got.zip(want).foreach { case ((_, gs), (_, ws)) =>
-        assert(gs == ws, s"serving score drift for '$q': $gs vs $ws")
-      }
-      // Wand.search joins docs and must preserve exactly this ordering
-      val served = Wand.search(ix, q, 32).select("docId", "score")
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(served == got, s"Wand.search join reorder for '$q'")
+      val got = hits(Wand.topKExpr(ix, QueryParser.parse(q).get, 32))
+      assertOracleRank(got, q, "serving")
+      // Engine.search (Wand.search: topKExpr joined to docs) must
+      // preserve exactly this ordering and these scores
+      val served = hits(Engine.search(ix, q, 32, "bm25"))
+      assert(served == got, s"Engine.search join reorder for '$q'")
     }
     // the pinned df dictionary (serving-loop fast path) must be
     // result-identical to the per-query df lookup — both the complete
@@ -191,12 +191,13 @@ class EngineParitySpec extends SparkSpec {
     }
   }
 
-  test("randomized boolean-AST fuzz: serving path == DataFrame path") {
+  test("randomized boolean-AST fuzz: serving path rank-identical to oracle") {
     // seeded random expression trees (nested AND/OR/NOT, quoted phrases,
-    // parens) rendered to the query grammar and parsed ONCE — both paths
-    // answer the same AST, so any doc-set or score divergence is a
-    // ConstraintEval/WAND bug, not a parser quirk. Harder than the fixed
-    // set above: NOT under OR, exclude-side phrases, stopword leaves.
+    // parens) rendered to the query grammar; WAND and the oracle parse
+    // the same string with the same parser, so any doc-set or score
+    // divergence is a ConstraintEval/WAND bug, not a parser quirk.
+    // Harder than the fixed set above: NOT under OR, exclude-side
+    // phrases, stopword leaves.
     val rnd = new scala.util.Random(777)
     val vocab = files.flatMap(f => graft.index.Tokenizer.tokenize(f.content))
       .groupBy(identity).view.mapValues(_.size).toSeq
@@ -215,12 +216,7 @@ class EngineParitySpec extends SparkSpec {
     var checked = 0
     qs.foreach { q =>
       QueryParser.parse(q).foreach { expr =>
-        val got = hits(Wand.topKExpr(ix, expr, 32))
-        val want = hits(Engine.search(ix, q, 32, "bm25"))
-        assert(got.map(_._1) == want.map(_._1), s"fuzz serving rank for '$q'")
-        got.zip(want).foreach { case ((_, gs), (_, ws)) =>
-          assert(gs == ws, s"fuzz serving score drift for '$q'")
-        }
+        assertOracleRank(hits(Wand.topKExpr(ix, expr, 32)), q, "fuzz serving")
         checked += 1
       }
     }

@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.corpus.CorpusGen
 import graft.index.{DocIds, IndexBuilder, IndexConfig}
+import graft.oracle.BruteForce
 import graft.tools.Serve
 
 /** The HTTP query API (reference S8: `FrontEnd/engine.cpp:186-269`):
@@ -33,18 +34,28 @@ class HttpServeSpec extends SparkSpec {
       assert(body.contains("\"docId\"") && body.contains("\"score\"")
         && body.contains("\"repo\"") && body.contains("\"path\""), body)
 
-      // the scorer arg is honored end-to-end, and the wand serving path
-      // answers boolean queries with the SAME hits as the bm25
-      // DataFrame path (constraint-aware WAND)
-      Seq("computer%20science", "hash%20table%20NOT%20parse",
-        "%22computer%20science%22").foreach { q =>
-        val wand = get(s"/api/search?q=$q&k=5&scorer=wand")
-        val bm25 = get(s"/api/search?q=$q&k=5&scorer=bm25")
-        assert(wand == bm25, s"wand vs bm25 over HTTP for '$q'")
+      // every scorer name is honored end-to-end: each answers boolean
+      // queries with the scalar oracle's top-k (wand and bm25 are two
+      // names for the same BM25 ranking; span is the reference ranker)
+      val oracle = BruteForce.index((0L until 250).map(CorpusGen.genDoc))
+      val hit = """"docId":(\d+),"score":([^,}]+)""".r
+      Seq("computer science", "hash table NOT parse",
+        "\"computer science\"").foreach { q =>
+        val enc = java.net.URLEncoder.encode(q, "UTF-8")
+        Seq("wand", "bm25", "span").foreach { scorer =>
+          val got = hit.findAllMatchIn(
+            get(s"/api/search?q=$enc&k=5&scorer=$scorer"))
+            .map(m => (m.group(1).toLong, m.group(2).toDouble)).toSeq
+          val want = oracle.search(q, 5, if (scorer == "span") "span" else "bm25")
+          assert(got.nonEmpty, s"$scorer over HTTP for '$q': no hits")
+          assert(got.map(_._1) == want.map(_.docId),
+            s"$scorer rank over HTTP for '$q'")
+          got.zip(want).foreach { case ((_, gs), w) =>
+            assert(math.abs(gs - w.score) < 1e-9,
+              s"$scorer score over HTTP for '$q'")
+          }
+        }
       }
-      // span scorer reachable too (different ranking — shape only)
-      val span = get("/api/search?q=computer%20science&k=3&scorer=span")
-      assert(span.startsWith("""{"results":["""), span)
 
       // snippets route: requested docIds come back with content prefixes
       val sn = get("/api/snippets?ids=0,1,2")

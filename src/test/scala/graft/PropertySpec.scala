@@ -53,7 +53,8 @@ class PropertySpec extends SparkSpec {
     // tokens over MaxTokenLen (50) are dropped by design: the minified
     // blob contributes NO postings but stays registered and queryable
     assert(lens("blob.min.js") == 0)
-    // both query paths still answer over the polluted index, agreeing
+    // conjunctive and disjunctive top-k still answer over the polluted
+    // index, agreeing
     val bm = Engine.search(dix, "hash table", 10).collect()
     assert(bm.map(_.getAs[String]("path")).toSet == Set("a.md", "b.md"))
     val wandDocs = graft.query.Wand.topK(dix, Seq("hash", "table"), 10)
@@ -150,21 +151,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("fused conjunctive BM25 equals docSet-join BM25 (10 random pairs)") {
-    (1 to 10).foreach { _ =>
-      val ts = Seq(randTerm(), randTerm())
-      val fused = Engine.bm25ConjunctiveScores(ix, ts)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-      val joined = Engine.bm25Scores(ix, ts)
-        .join(Engine.docSet(ix, SeqAnd(ts.map(Term(_)).distinct)), "docId")
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-      assert(fused.keySet == joined.keySet, s"docset for $ts")
-      fused.foreach { case (d, s) =>
-        assert(math.abs(s - joined(d)) < 1e-12, s"score $d for $ts")
-      }
-    }
-  }
-
   test("WAND stays lossless with a non-default block size") {
     val ix32 = IndexBuilder.build(
       DocIds.assign(CorpusGen.generate(spark, 150, 3), 3),
@@ -181,7 +167,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("searchJson emits one parseable object per hit with the hit fields") {
-    val lines = Engine.searchJson(ix, "computer science", 5).collect()
+    val lines = graft.tools.Serve.searchJson(ix, "computer science", 5, "bm25")
     assert(lines.nonEmpty && lines.length <= 5)
     lines.foreach { l =>
       assert(l.startsWith("{") && l.contains("\"docId\"") &&

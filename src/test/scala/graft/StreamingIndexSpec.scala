@@ -71,9 +71,17 @@ class StreamingIndexSpec extends SparkSpec {
         .otherwise(xxhash64(col("repo"), col("path"), col("commit"), salt)),
         lit(256L))
     val batch = CorpusGen.generate(spark, 60, 2).toDF()
-    val r1 = StreamingIndexBuild.resolveDocIds(batch, None, coarse)
+    // the resolved frame stays cached until its cleanup runs; after the
+    // cleanup no cached frame is left behind
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val (resolved1, cleanup1) =
+      StreamingIndexBuild.resolveDocIds(batch, None, coarse)
+    val r1 = resolved1
       .select("docId", "repo", "path").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
+    cleanup1()
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "resolveDocIds cleanup must release every cached round")
     // every doc indexed, every docId unique — collisions resolved, not
     // dropped and not merged (the round-2 loud-failure flipped to
     // correct indexing)
@@ -83,7 +91,7 @@ class StreamingIndexSpec extends SparkSpec {
     val salt0 = batch.select(coarse(lit(0))).collect().map(_.getLong(0))
     assert(salt0.distinct.length < 60, "fixture failed to plant collisions")
     // deterministic: identical reassignment on a second run (replay)
-    val r2 = StreamingIndexBuild.resolveDocIds(batch, None, coarse)
+    val r2 = StreamingIndexBuild.resolveDocIds(batch, None, coarse)._1
       .select("docId", "repo", "path").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
     assert(r1.toSeq == r2.toSeq)
@@ -91,15 +99,15 @@ class StreamingIndexSpec extends SparkSpec {
     // cross-batch: re-resolving the same docs against the registry walks
     // each doc back to its ORIGINAL id (re-ingest stays an anti-join
     // no-op); new docs get ids disjoint from the registry's
-    val registry = StreamingIndexBuild.resolveDocIds(batch, None, coarse)
+    val registry = StreamingIndexBuild.resolveDocIds(batch, None, coarse)._1
       .select(col("docId"), col("repo").as("pRepo"),
         col("path").as("pPath"), col("commit").as("pCommit"))
-    val again = StreamingIndexBuild.resolveDocIds(batch, Some(registry), coarse)
+    val again = StreamingIndexBuild.resolveDocIds(batch, Some(registry), coarse)._1
       .select("docId", "repo", "path").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
     assert(again.toSeq == r1.toSeq)
     val fresh = spark.range(60, 90).map(i => CorpusGen.genDoc(i.longValue())).toDF()
-    val newIds = StreamingIndexBuild.resolveDocIds(fresh, Some(registry), coarse)
+    val newIds = StreamingIndexBuild.resolveDocIds(fresh, Some(registry), coarse)._1
       .select("docId").collect().map(_.getLong(0)).toSet
     assert(newIds.size == 30)
     assert(newIds.intersect(r1.map(_._1).toSet).isEmpty)
@@ -116,7 +124,7 @@ class StreamingIndexSpec extends SparkSpec {
         .otherwise(pmod(xxhash64(col("repo"), col("path"), col("commit"),
           salt), lit(1000000L)))
     val x = Seq(("zz-repo", "src/x.c", "c1")).toDF("repo", "path", "commit")
-    val registry = StreamingIndexBuild.resolveDocIds(x, None, coarse)
+    val registry = StreamingIndexBuild.resolveDocIds(x, None, coarse)._1
       .select(col("docId"), col("repo").as("pRepo"),
         col("path").as("pPath"), col("commit").as("pCommit"))
     assert(registry.select("docId").head().getLong(0) == 7L)
@@ -124,7 +132,7 @@ class StreamingIndexSpec extends SparkSpec {
     val batch2 = Seq(("zz-repo", "src/x.c", "c1"),
       ("aa-repo", "src/y.c", "c1")).toDF("repo", "path", "commit")
     val resolved =
-      StreamingIndexBuild.resolveDocIds(batch2, Some(registry), coarse)
+      StreamingIndexBuild.resolveDocIds(batch2, Some(registry), coarse)._1
     val byRepo = resolved.collect()
       .map(r => r.getAs[String]("repo") -> r.getAs[Long]("docId")).toMap
     assert(byRepo("zz-repo") == 7L) // re-ingested doc keeps its id
@@ -139,7 +147,7 @@ class StreamingIndexSpec extends SparkSpec {
     // bump the re-ingest either
     val dupReg = registry.union(registry)
     val resolvedDup =
-      StreamingIndexBuild.resolveDocIds(batch2, Some(dupReg), coarse)
+      StreamingIndexBuild.resolveDocIds(batch2, Some(dupReg), coarse)._1
         .collect().map(r => r.getAs[String]("repo") -> r.getAs[Long]("docId"))
         .toMap
     assert(resolvedDup("zz-repo") == 7L)
