@@ -152,7 +152,12 @@ final case class IndexTables(
     termStats: DataFrame,
     norms: DataFrame,
     stats: CorpusStats,
-    config: IndexConfig)
+    config: IndexConfig) {
+  /** The BM25 executor's bucket-partitioned row inputs over these
+    * tables, built on first use and kept for the life of the handle. */
+  private[graft] lazy val wandInputs: graft.query.Wand.Inputs =
+    new graft.query.Wand.Inputs(this)
+}
 
 /** Inverted-index construction as declarative Dataset transforms.
   *
@@ -350,7 +355,28 @@ object IndexBuilder {
       blocks.as("blocks"))
   }
 
-  def build(corpusWithDocId: DataFrame, cfg: IndexConfig = IndexConfig()): IndexTables = {
+  def build(corpusWithDocId: DataFrame, cfg: IndexConfig = IndexConfig()): IndexTables =
+    buildStaged(corpusWithDocId, cfg)._1
+
+  /** Hash-partitions an index table by docId bucket into
+    * `cfg.indexPartitions` partitions: on `bucket` where the table has
+    * one (index, norms), otherwise on the same bucket of `docId` (docs).
+    * Partition i of every table so partitioned holds the same buckets.
+    * The planner drops this exchange on a table that is already
+    * partitioned this way. */
+  def bucketPartitioned(df: DataFrame, cfg: IndexConfig): DataFrame =
+    df.repartition(cfg.indexPartitions,
+      if (df.columns.contains("bucket")) col("bucket")
+      else shiftright(col("docId"), cfg.bucketBits))
+
+  /** [[build]] plus a hook that releases the intermediates it persists
+    * (the corpus and termDoc). Call the hook once the tables are
+    * materialized where they are kept, e.g. pinned and counted: Spark
+    * keeps an already-loaded cache whose plan reads an intermediate when
+    * that intermediate is unpersisted, while an unloaded table would
+    * re-tokenize the corpus. */
+  def buildStaged(corpusWithDocId: DataFrame,
+      cfg: IndexConfig = IndexConfig()): (IndexTables, () => Unit) = {
     val corpus =
       if (cfg.persistIntermediate)
         corpusWithDocId.persist(StorageLevel.MEMORY_AND_DISK)
@@ -384,6 +410,9 @@ object IndexBuilder {
     val index = encodeIndexRows(plistRows(tdP, stats, cfg), cfg)
     val norms = buildNorms(docs, cfg)
 
-    IndexTables(docs, index, termStats, norms, stats, cfg)
+    (IndexTables(docs, index, termStats, norms, stats, cfg), { () =>
+      if (cfg.persistIntermediate) corpus.unpersist()
+      tdP.unpersist()
+    })
   }
 }

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexBuilder, IndexTables}
@@ -239,15 +239,12 @@ object Engine {
       spanScoreUdf(arr("m_body"), arr("m_path")).as("spanScore"))
   }
 
-  /** The (docId, score, repo, path) result schema with zero rows — the
-    * no-parse answer of both ranked scorers (span here, BM25 in
-    * `Wand.search`), shared so their schemas cannot drift. */
-  private[query] def emptyResults(
+  /** The span scorer's no-parse answer: zero rows in
+    * [[Wand.SearchSchema]], the schema both ranked scorers share. */
+  private def emptyResults(
       spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.emptyDataFrame
-      .withColumn("docId", lit(0L)).withColumn("score", lit(0.0))
-      .withColumn("repo", lit("")).withColumn("path", lit(""))
-      .limit(0)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      Wand.SearchSchema)
 
   /** Full ranked search: parse → boolean match → score → top-k → join
     * docs. Scorer "span" (reference parity; span + path score,

@@ -1,19 +1,30 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.IndexTables
+import graft.index.{IndexBuilder, IndexTables}
 
 /** Block-max-WAND top-k over the compressed index.
   *
   * Spark-first layout: posting lists are sharded by docId-range bucket
-  * (one index row per (term, bucket)), so WAND runs embarrassingly
-  * parallel per bucket — each bucket is a self-contained mini-index with
-  * its own norms row — followed by a single global
-  * `TakeOrderedAndProject` merge. This is the 1000-executor plan: no
-  * driver-side posting traversal, no shuffle beyond the k·buckets local
-  * hits.
+  * (one index row per (term, bucket)), and the serving inputs — index,
+  * norms and docs — are hash-partitioned by that bucket into the same
+  * partitions ([[IndexBuilder.bucketPartitioned]]), so every bucket is a
+  * self-contained mini-index whose postings, norms and doc rows sit in
+  * one partition. A query is therefore ONE Spark job with no shuffle
+  * (the reference's scatter-gather: broadcast the query to the shards,
+  * merge their top-k): one `zipPartitions` task per partition filters
+  * the query's term rows, runs WAND over each of its buckets into one
+  * partition-wide top-k, and attaches repo/path to its winners from the
+  * co-located docs rows; the driver merges at most k·partitions hits.
+  * Neither postings nor norms are shuffled. The row RDDs are built once
+  * per handle ([[Inputs]]), so a query pays no DataFrame construction or
+  * planning either.
   *
   * Pruning hierarchy (reference analog: seek tables,
   * `/root/reference/src/inverted_index/IndexFile.h:242-254`; WAND is the
@@ -29,10 +40,11 @@ import graft.index.IndexTables
   *      fail, then full AND/OR/NOT/phrase evaluation) BEFORE scoring,
   *      the reference's match-then-score loop
   *      (`/root/reference/src/constraint_solver.h:405-504`).
-  * The per-bucket threshold starts empty (buckets are independent
-  * tasks), so each bucket decodes its candidate rows once — cross-bucket
-  * threshold sharing would serialize the scan and is deliberately
-  * traded away for embarrassing parallelism.
+  * The threshold is shared by the buckets of one partition (they run in
+  * one task, one after another) and starts empty in each partition:
+  * cross-partition sharing would serialize the scan and is deliberately
+  * traded away for embarrassing parallelism. Sharing within a partition
+  * is exact, because the top-k order (score desc, docId asc) is total.
   *
   * Scores are exact BM25 (tf from blob, docLen from the bucket's norms
   * row) over the POSITIVE terms present in the doc, summed in
@@ -44,13 +56,56 @@ import graft.index.IndexTables
   */
 object Wand {
 
+  /** One (term, bucket) posting row as the cursors read it; `positions`
+    * is null unless the term is a member of one of the query's phrases. */
   final case class IxRow(term: String, bucket: Long, n: Int,
       docIds: Array[Byte], tfs: Array[Byte],
       positions: Array[Array[Byte]],
       blockMaxes: Array[Double], blockMaxDocIds: Array[Long],
       rowMax: Double)
-  final case class NrmRow(bucket: Long, docIds: Array[Byte],
-      docLens: Array[Byte])
+
+  /** One ranked hit with its document's repo and path. */
+  final case class Ranked(docId: Long, score: Double, repo: String,
+      path: String)
+
+  /** [[search]]'s result schema, shared by every ranked scorer. */
+  val SearchSchema: StructType = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("repo", StringType), StructField("path", StringType)))
+
+  /** The serving inputs of one handle: its tables projected to what the
+    * executor reads, [[IndexBuilder.bucketPartitioned]], and turned into
+    * row RDDs once (memoized as `IndexTables.wandInputs`). On a handle pinned
+    * co-partitioned the RDDs scan the cached tables directly; on any
+    * other handle (e.g. `IndexStore.read`) building them runs the bucket
+    * repartition once, and later queries reuse its map output. */
+  final class Inputs(ix: IndexTables) {
+    private def aligned(df: DataFrame): DataFrame =
+      IndexBuilder.bucketPartitioned(df, ix.config)
+
+    /** The index scan the executor reads; `positions` (the largest blob
+      * column) only when a query has a phrase. */
+    def postingScan(withPositions: Boolean): DataFrame =
+      aligned(ix.index.select((Seq("field", "term", "bucket", "n",
+        "docIds", "tfs", "blocks", "rowMax") ++
+        (if (withPositions) Seq("positions") else Nil)).map(col): _*))
+
+    private val blockType =
+      ix.index.schema("blocks").dataType.asInstanceOf[ArrayType]
+        .elementType.asInstanceOf[StructType]
+    private[Wand] val maxDocIdAt = blockType.fieldIndex("maxDocId")
+    private[Wand] val blockMaxAt = blockType.fieldIndex("blockMax")
+
+    lazy val postings: RDD[InternalRow] =
+      postingScan(false).queryExecution.toRdd
+    lazy val postingsWithPositions: RDD[InternalRow] =
+      postingScan(true).queryExecution.toRdd
+    lazy val norms: RDD[InternalRow] = aligned(ix.norms.select(
+      col("bucket"), col("docIds"), col("docLens"))).queryExecution.toRdd
+    lazy val docs: RDD[InternalRow] = aligned(ix.docs.select(
+      col("docId"), col("repo"), col("path"))).queryExecution.toRdd
+  }
 
   /** One term's cursor over a bucket row, decoded BLOCK-AT-A-TIME: the
     * blob is never fully materialized. Seeks jump via the block
@@ -313,12 +368,13 @@ object Wand {
   }
 
   /** Top-k BM25 for `terms`, DISJUNCTIVE (bag-of-words) semantics — the
-    * classic WAND. Returns (docId, score). `dfs`: optional pinned
+    * classic WAND. Returns (docId, score) in (score desc, docId asc)
+    * order as a local DataFrame. `dfs`: optional pinned
     * [[dfDictionary]] (skips the per-query df lookup job). */
   def topK(ix: IndexTables, terms: Seq[String], k: Int = 32,
       field: String = "body",
       dfs: Option[DfDict] = None): DataFrame =
-    run(ix, terms.distinct.sorted, None, k, field, dfs)
+    scored(ix, run(ix, terms.distinct.sorted, None, k, field, dfs))
 
   /** Constraint-aware top-k: candidates must satisfy the full boolean
     * expression (AND / OR / NOT / phrase / parens) — the doc set of
@@ -326,50 +382,51 @@ object Wand {
     * the positive terms they contain. */
   def topKExpr(ix: IndexTables, expr: QueryExpr, k: Int = 32,
       field: String = "body",
+      dfs: Option[DfDict] = None): DataFrame =
+    scored(ix, hitsExpr(ix, expr, k, field, dfs))
+
+  /** Full ranked BM25 search: parse → constraint-aware WAND with
+    * repo/path attached; (docId, score, repo, path) in (score desc,
+    * docId asc) order as a local DataFrame, the shape every scorer of
+    * [[Engine.search]] returns. */
+  def search(ix: IndexTables, query: String, k: Int = 32,
       dfs: Option[DfDict] = None): DataFrame = {
-    val spark = ix.index.sparkSession
-    import spark.implicits._
+    val rows = hits(ix, query, k, dfs)
+      .map(h => Row(h.docId, h.score, h.repo, h.path))
+    ix.index.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), SearchSchema)
+  }
+
+  /** [[search]]'s hits as driver-side values (no DataFrame at all):
+    * the serving loop formats these directly. */
+  def hits(ix: IndexTables, query: String, k: Int = 32,
+      dfs: Option[DfDict] = None): Array[Ranked] =
+    QueryParser.parse(query) match {
+      case None       => Array.empty
+      case Some(expr) => hitsExpr(ix, expr, k, "body", dfs)
+    }
+
+  private def hitsExpr(ix: IndexTables, expr: QueryExpr, k: Int,
+      field: String, dfs: Option[DfDict]): Array[Ranked] = {
     val scoring = expr.terms.distinct.sorted
-    if (scoring.isEmpty)
-      Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (scoring.isEmpty) Array.empty
     else run(ix, scoring, Some(expr), k, field, dfs)
   }
 
-  /** Full ranked BM25 search: parse → constraint-aware WAND → join
-    * docs; (docId, score, repo, path) in (score desc, docId asc) order,
-    * the shape every scorer of [[Engine.search]] returns. */
-  def search(ix: IndexTables, query: String, k: Int = 32,
-      dfs: Option[DfDict] = None): DataFrame = {
+  private def scored(ix: IndexTables, hits: Array[Ranked]): DataFrame = {
     val spark = ix.index.sparkSession
-    QueryParser.parse(query) match {
-      case None => Engine.emptyResults(spark)
-      case Some(expr) =>
-        topKExpr(ix, expr, k, dfs = dfs)
-          .join(ix.docs.select(col("docId"), col("repo"), col("path")),
-            "docId")
-          .select(col("docId"), col("score"), col("repo"), col("path"))
-          .orderBy(col("score").desc, col("docId").asc)
-    }
+    import spark.implicits._
+    hits.toSeq.map(h => (h.docId, h.score)).toDF("docId", "score")
   }
-
-  /** Corpus size at which the norms-side bucket semi-join pays for its
-    * extra broadcast-subquery job (see the plan note in [[run]]).
-    * Overridable system property so tests can force either plan
-    * shape. */
-  private def normsPruneMinDocs: Long =
-    sys.props.get("graft.wand.normsPruneMinDocs").flatMap(_.toLongOption)
-      .getOrElse(1L << 20)
 
   private def run(ix: IndexTables, scoring: Seq[String],
       exprOpt: Option[QueryExpr], k: Int, field: String,
-      dfDict: Option[DfDict] = None): DataFrame = {
-    val spark = ix.index.sparkSession
-    import spark.implicits._
+      dfDict: Option[DfDict]): Array[Ranked] = {
     val scoringSet = scoring.toSet
     val allTs =
       (scoring ++ exprOpt.map(_.allTerms).getOrElse(Seq.empty)).distinct.sorted
     val phraseTerms =
-      exprOpt.map(_.phrases.flatten.distinct).getOrElse(Seq.empty)
+      exprOpt.map(_.phrases.flatten.distinct).getOrElse(Seq.empty).toSet
     val requiredTs = exprOpt.map(_.requiredTerms).getOrElse(Set.empty)
     val dfs = dfDict match {
       case Some(d) =>
@@ -387,69 +444,66 @@ object Wand {
     val k1 = ix.config.k1
     val b = ix.config.b
     val avgdl = ix.stats.avgDocLen
-
-    // positions ride along ONLY for phrase-member terms (and only when
-    // the expr has a phrase at all — otherwise the parquet scan never
-    // reads the positions column)
-    val posCol =
-      if (phraseTerms.isEmpty)
-        lit(null).cast("array<binary>")
-      else
-        when(col("term").isin(phraseTerms: _*), col("positions"))
-    val rows = ix.index
-      .filter(col("field") === field && col("term").isin(allTs: _*))
-      .select(col("term"), col("bucket"), col("n"), col("docIds"), col("tfs"),
-        posCol.as("positions"),
-        transform(col("blocks"), x => x.getField("blockMax")).as("blockMaxes"),
-        transform(col("blocks"), x => x.getField("maxDocId")).as("blockMaxDocIds"),
-        col("rowMax"))
-      .as[IxRow]
-    // prune norms to the buckets the query's posting rows can touch
-    // BEFORE the cogroup shuffle: the cogroup function discards norms
-    // rows whose bucket has no scoring row anyway, but without this
-    // pre-filter every query shuffled the ENTIRE norms table to get
-    // there (at 10^12 docs / bucketBits=16 that is a multi-TB norms
-    // shuffle per query). The term-filtered rows' distinct bucket set
-    // is small (≤ one per posting row), so it broadcasts and the norms
-    // side becomes a shuffle-free broadcast semi-join; result-identical
-    // by construction.
-    //
-    // The trade inverts with corpus size (measured in an interleaved
-    // A/B, recorded in BASELINE.md): the semi-join
-    // costs one extra broadcast-subquery job per query, so below
-    // `normsPruneMinDocs` the whole norms table is cheaper to cogroup
-    // than the job is to schedule. Driver-side stat-based plan choice,
-    // the cost-based-optimizer move, on a statistic (`stats.nDocs`)
-    // already in hand.
-    val normsAll = ix.norms.select(col("bucket"), col("docIds"),
-      col("docLens"))
-    val norms =
-      (if (ix.stats.nDocs >= normsPruneMinDocs)
-        normsAll.join(broadcast(rows.select(col("bucket")).distinct()),
-          Seq("bucket"), "left_semi")
-      else normsAll).as[NrmRow]
-
     val codec = graft.index.codec.PostingCodec(ix.config.codec)
-    val hits = rows.groupByKey(_.bucket)
-      .cogroup(norms.groupByKey(_.bucket)) { (bucket, rIt, nIt) =>
-        val rs = rIt.toArray
-        val scoringRows = rs.filter(r => scoringSet(r.term))
-        if (scoringRows.isEmpty ||
-          // required-term bucket skip: a bucket missing any must-have
-          // term's posting row cannot contain a matching doc
-          !requiredTs.forall(t => rs.exists(_.term == t))) Iterator.empty
-        else nIt.toSeq.headOption match {
-          case None => Iterator.empty
-          case Some(nr) =>
-            lazy val nIds = codec.decode(nr.docIds, delta = true)
-            lazy val nLens = codec.decode(nr.docLens, delta = false)
+
+    val in = ix.wandInputs
+    val maxDocIdAt = in.maxDocIdAt
+    val blockMaxAt = in.blockMaxAt
+    // a phrase-free query never reads (or decodes) the positions column
+    val postings =
+      if (phraseTerms.isEmpty) in.postings else in.postingsWithPositions
+
+    val partitionHits = postings.zipPartitions(in.norms, in.docs) {
+      (pIt, nIt, dIt) =>
+        val fieldU = UTF8String.fromString(field)
+        val termsU = allTs.map(UTF8String.fromString).toSet
+        // this partition's posting rows of the query's terms, by bucket
+        // (rows are reused by the scan: copy out what is kept)
+        val byBucket = pIt
+          .filter(r => r.getUTF8String(0) == fieldU &&
+            termsU(r.getUTF8String(1)))
+          .map { r =>
+            val term = r.getUTF8String(1).toString
+            val blocks = r.getArray(6)
+            val nb = blocks.numElements()
+            val pos =
+              if (!phraseTerms(term)) null
+              else {
+                val a = r.getArray(8)
+                Array.tabulate(a.numElements())(a.getBinary)
+              }
+            IxRow(term, r.getLong(2), r.getInt(3), r.getBinary(4),
+              r.getBinary(5), pos,
+              Array.tabulate(nb)(i => blocks.getStruct(i, 3).getDouble(blockMaxAt)),
+              Array.tabulate(nb)(i => blocks.getStruct(i, 3).getLong(maxDocIdAt)),
+              r.getDouble(7))
+          }
+          .toArray.groupBy(_.bucket)
+          // a bucket with no scoring row, or missing a required term's
+          // row, cannot contain a matching doc
+          .filter { case (_, rs) =>
+            rs.exists(r => scoringSet(r.term)) &&
+              requiredTs.forall(t => rs.exists(_.term == t))
+          }
+        if (byBucket.isEmpty) Iterator.empty
+        else {
+          val normsOf = nIt.filter(r => byBucket.contains(r.getLong(0)))
+            .map(r => r.getLong(0) -> ((r.getBinary(1), r.getBinary(2))))
+            .toMap
+          val topK = new TopK(k)
+          byBucket.toSeq.sortBy(_._1).foreach { case (bucket, rs) =>
+            // LOUD on a bucket or docId missing from the norms: a silent
+            // skip or docLen-0 fallback would drop or re-rank hits — a
+            // partitioning or merge bug must fail, not answer wrongly
+            // (index+norms are built together, so this cannot fire on a
+            // healthy index)
+            val (idBlob, lenBlob) = normsOf.getOrElse(bucket,
+              throw new IllegalStateException(
+                s"bucket $bucket has postings but no norms row in its partition"))
+            lazy val nIds = codec.decode(idBlob, delta = true)
+            lazy val nLens = codec.decode(lenBlob, delta = false)
             val docLenAt: Long => Long = { d =>
               val p = java.util.Arrays.binarySearch(nIds, d)
-              // LOUD on a docId missing from the norms blob: a silent
-              // docLen-0 fallback would SHRINK the BM25 denominator and
-              // quietly inflate that doc's score — a partial merge bug
-              // must fail, not re-rank (index+norms are built together,
-              // so this cannot fire on a healthy index)
               require(p >= 0,
                 s"docId $d in postings of bucket $bucket but absent from norms")
               nLens(p)
@@ -457,7 +511,7 @@ object Wand {
             def mkCursor(r: IxRow): Cursor =
               new Cursor(r, idfs.getOrElse(r.term, 0.0), k1, b, avgdl,
                 blockSize, codec)
-            val cursors = scoringRows.map(mkCursor)
+            val cursors = rs.filter(r => scoringSet(r.term)).map(mkCursor)
             val matcher = exprOpt.map { e =>
               // ONE cursor per term: positive terms reuse the scoring
               // cursors (shared monotone position), exclude-side terms
@@ -467,12 +521,24 @@ object Wand {
                   .map(r => r.term -> mkCursor(r)).toMap
               new ConstraintEval(e, byTerm)
             }
-            val topK = new TopK(k)
             bucketTopK(cursors, matcher, docLenAt, topK)
-            topK.drain()
+          }
+          val winners = topK.drain().toMap
+          // repo/path for the winners only, from the co-located docs rows
+          val attached = scala.collection.mutable.HashMap.empty[Long, (String, String)]
+          dIt.foreach { r =>
+            val d = r.getLong(0)
+            if (winners.contains(d) && !attached.contains(d))
+              attached(d) = (Option(r.getUTF8String(1)).map(_.toString).orNull,
+                Option(r.getUTF8String(2)).map(_.toString).orNull)
+          }
+          winners.iterator.map { case (d, s) =>
+            val (repo, path) = attached.getOrElse(d, (null, null))
+            Ranked(d, s, repo, path)
+          }
         }
-      }
-      .toDF("docId", "score")
-    hits.orderBy(col("score").desc, col("docId").asc).limit(k)
+    }.collect()
+    partitionHits.sortWith((x, y) =>
+      x.score > y.score || (x.score == y.score && x.docId < y.docId)).take(k)
   }
 }

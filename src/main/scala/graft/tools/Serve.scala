@@ -46,15 +46,21 @@ object Serve {
       case c => c.toString
     }
 
-  /** One query, any scorer, as JSON hit objects. "wand" and "bm25" are
-    * two names for the same BM25 ranking on the one top-k executor
-    * (constraint-aware block-max WAND); "span" is the reference-parity
-    * span ranker. An unknown scorer is a CLIENT error (400), not a
-    * MatchError 500. */
+  private def jsonString(s: String): String =
+    if (s == null) "null" else "\"" + jsonEscape(s) + "\""
+
+  /** One query, any scorer, as JSON hit objects
+    * `{"docId":..,"score":..,"repo":..,"path":..}`. "wand" and "bm25"
+    * are two names for the same BM25 ranking on the one top-k executor
+    * (constraint-aware block-max WAND), formatted here from its hits with
+    * no further Spark job; "span" is the reference-parity span ranker.
+    * An unknown scorer is a CLIENT error (400), not a MatchError 500. */
   def searchJson(ix: graft.index.IndexTables, q: String, k: Int,
       scorer: String,
       dfs: Option[Wand.DfDict] = None): Array[String] = scorer match {
-    case "wand" | "bm25" => Wand.search(ix, q, k, dfs).toJSON.collect()
+    case "wand" | "bm25" => Wand.hits(ix, q, k, dfs).map(h =>
+      s"""{"docId":${h.docId},"score":${h.score},"repo":${
+        jsonString(h.repo)},"path":${jsonString(h.path)}}""")
     case "span"          => Engine.search(ix, q, k, "span").toJSON.collect()
     case other => throw new BadRequest(
       s"unknown scorer '$other' (expected one of ${Scorers.mkString("|")})")
@@ -153,6 +159,12 @@ object Serve {
     // http <sfDir> [port] [scorer]; serve <sfDir> [scorer]
     val scorer = checkScorer(
       args.lift(if (mode == "serve") 2 else 3).getOrElse("wand"))
+    // the port, too, is checked before the index load it would follow
+    val port = if (mode == "serve") 0 else args.lift(2).fold(8080) { p =>
+      val n = p.toIntOption.filter(n => n >= 0 && n <= 65535)
+      require(n.nonEmpty, s"port '$p' is not an integer in 0..65535")
+      n.get
+    }
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -167,7 +179,6 @@ object Serve {
     // memoized pinned handle the driver contract uses, so a process
     // running both never builds twice and config changes reach both
     val ix = graft.SparkEntry.index(spark, sfDir)
-    ix.index.count(); ix.docs.count(); ix.termStats.count(); ix.norms.count()
     // snippets source, pinned like the index (reference keeps the doc
     // store mmap'd next to the chunks)
     val corpus = graft.SparkEntry.corpus(spark, sfDir)
@@ -202,8 +213,7 @@ object Serve {
           }
 
       case _ =>
-        val server = startHttp(ix, corpus,
-          args.lift(2).map(_.toInt).getOrElse(8080), scorer, dfDict)
+        val server = startHttp(ix, corpus, port, scorer, dfDict)
         System.err.println(
           s"graft-serve http on port ${server.getAddress.getPort} " +
             s"(default scorer=$scorer)")

@@ -131,4 +131,12 @@ class HttpServeSpec extends SparkSpec {
       assert(bodies.toSet.size == 1 && bodies.head.contains("docId"))
     } finally server.stop(0)
   }
+
+  test("http mode rejects a malformed port before loading the index") {
+    // the sfDir does not exist: a port check that ran only after the
+    // index load would fail on the missing input instead
+    val e = intercept[IllegalArgumentException](
+      Serve.main(Array("http", "/nonexistent-sf-dir", "80x80")))
+    assert(e.getMessage.contains("port '80x80'"), e.getMessage)
+  }
 }

@@ -49,48 +49,133 @@ class PlanSpec extends SparkSpec {
 
   test("non-phrase WAND serving path prunes the positions column") {
     val ix = IndexStore.read(spark, dir)
-    // a boolean (but phrase-free) serving query: positions must never be
-    // read — the cursor rows carry a null literal, so the parquet scan's
-    // ReadSchema excludes the (largest) blob column entirely
-    val expr = graft.query.QueryParser.parse("computer AND science NOT hash").get
-    val q = graft.query.Wand.topKExpr(ix, expr, 8)
-    val plan = formatted(q)
-    val readSchemas = plan.linesIterator
+    // the serving scan a phrase-free query runs on must never read
+    // positions: the parquet scan's ReadSchema excludes the (largest)
+    // blob column entirely
+    val scan = ix.wandInputs.postingScan(withPositions = false)
+    val readSchemas = formatted(scan).linesIterator
       .filter(_.trim.startsWith("ReadSchema")).mkString("\n")
     assert(!readSchemas.contains("positions"), readSchemas)
-    // while a phrase query legitimately reads them
-    val pq = graft.query.Wand.topKExpr(ix,
-      graft.query.QueryParser.parse("\"computer science\"").get, 8)
-    assert(formatted(pq).contains("positions"), "phrase plan lost positions")
+    assert(readSchemas.contains("docIds"), readSchemas)
+    // while the phrase input legitimately reads them
+    assert(formatted(ix.wandInputs.postingScan(withPositions = true))
+      .contains("positions"), "phrase scan lost positions")
   }
 
-  test("WAND norms side is bucket-pruned at scale, whole at demo size") {
+  /** Runs `f` in its own job group; returns its value, the Spark jobs it
+    * ran and the shuffle bytes those jobs' tasks read and wrote. */
+  private def anatomy[T](f: => T): (T, Int, Long) = {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"anatomy-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+          .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(
+            e.taskMetrics.shuffleReadMetrics.totalBytesRead +
+              e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "anatomy")
+    try {
+      val r = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, jobs.get, shuffleBytes.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val hitRe = """"docId":(\d+),"score":([^,}]+)""".r
+  private def parsed(lines: Seq[String]): Seq[(Long, Double)] =
+    hitRe.findAllMatchIn(lines.mkString)
+      .map(m => (m.group(1).toLong, m.group(2).toDouble)).toSeq
+
+  /** The scalar oracle's top-k over a `documents.parquet` dir, in the
+    * docIds [[SparkEntry.corpus]] gives the documents. */
+  private def oracleOf(sfDir: String): (String, Int) => Seq[(Long, Double)] = {
+    val rows = SparkEntry.corpus(spark, sfDir).collect()
+    val files = rows.map(r => RepoFile(r.getString(1), r.getString(2),
+      r.getString(3), r.getString(4), r.getString(5))).toSeq
+    val idOf = rows.map(r => (r.getString(1), r.getString(2)) -> r.getLong(0))
+      .toMap
+    val bf = graft.oracle.BruteForce.index(files)
+    (q, k) => bf.search(q, k).map { h =>
+      val f = bf.docs(h.docId.toInt).file
+      (idOf((f.repo, f.path)), h.score)
+    }
+  }
+
+  private def assertSameHits(got: Seq[(Long, Double)],
+      want: Seq[(Long, Double)], what: String): Unit = {
+    assert(got.nonEmpty && got.map(_._1) == want.map(_._1), what)
+    got.zip(want).foreach { case ((_, g), (_, w)) =>
+      assert(math.abs(g - w) < 1e-9, what)
+    }
+  }
+
+  test("pinned serving: one job, no shuffle, only the four tables cached") {
+    // a documents.parquet in the driver's testdata shape
+    val sfDir = Files.createTempDirectory("graft-pinned").toString
+    DocIds.assign(CorpusGen.generate(spark, 240, 4), 4)
+      .select(col("docId").as("doc_id"), col("repo").as("source"),
+        col("lang"), col("content").as("text"))
+      .write.parquet(s"$sfDir/documents.parquet")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ix = SparkEntry.index(spark, sfDir)
+    // the build's cached corpus and termDoc are released: what stays
+    // pinned is the index, docs, termStats and norms
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.size == 4, sc.getPersistentRDDs.values.mkString("\n"))
+    // ... and materialized: every partition of each is in storage
+    val stored = sc.getRDDStorageInfo.filter(r => pinned(r.id))
+    assert(stored.length == 4 &&
+      stored.forall(r => r.numCachedPartitions == r.numPartitions),
+      stored.mkString("\n"))
+    val dfs = Some(graft.query.Wand.dfDictionary(ix))
+    val oracle = oracleOf(sfDir)
+    Seq("computer science", "hash table NOT parse", "\"hash table\"",
+      "(parse OR tree) AND if").foreach { q =>
+      graft.tools.Serve.searchJson(ix, q, 10, "wand", dfs) // warm
+      val (lines, jobs, shuffleBytes) =
+        anatomy(graft.tools.Serve.searchJson(ix, q, 10, "wand", dfs))
+      assert(jobs == 1, s"'$q' ran $jobs jobs")
+      assert(shuffleBytes == 0, s"'$q' shuffled $shuffleBytes bytes")
+      assertSameHits(parsed(lines.toSeq), oracle(q, 10), s"pinned '$q'")
+    }
+  }
+
+  test("stored-handle serving: one job per query after the first") {
     val ix = IndexStore.read(spark, dir)
-    // at corpus scale the cogroup must see only norms rows for buckets
-    // the query's term-filtered posting rows touch: a broadcast
-    // LEFT-SEMI prunes the norms scan before its shuffle (without it
-    // every query shuffles the ENTIRE norms table — multi-TB at 10^12
-    // docs). Below the threshold the semi-join's extra broadcast job
-    // costs more than the handful of norms rows it saves, so the plan
-    // stays whole-table. Both shapes forced via the property; both must
-    // answer identically.
-    def plan(): String = graft.query.Wand
-      .topK(ix, Seq("computer", "science"), 8)
-      .queryExecution.executedPlan.toString
-    def top(): Seq[(Long, Double)] = graft.query.Wand
-      .topK(ix, Seq("computer", "science"), 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val prop = "graft.wand.normsPruneMinDocs"
-    sys.props(prop) = "0"
-    val (prunedPlan, prunedTop) =
-      try (plan(), top()) finally sys.props.remove(prop)
-    assert(prunedPlan.contains("LeftSemi"),
-      s"norms side lost its bucket semi-join:\n$prunedPlan")
-    // default threshold (1M docs) keeps the 200-doc fixture unpruned
-    assert(!plan().contains("LeftSemi"),
-      "demo-scale plan should not pay the semi-join's broadcast job")
-    assert(prunedTop.nonEmpty && prunedTop == top(),
-      "plan shapes must answer identically")
+    val dfs = Some(graft.query.Wand.dfDictionary(ix))
+    val oracle = graft.oracle.BruteForce.index(
+      (0L until 200).map(CorpusGen.genDoc))
+    val qs = Seq("computer science", "hash table NOT parse",
+      "\"computer science\"")
+    (1 to 2).foreach { round =>
+      qs.foreach { q =>
+        val (lines, jobs, _) =
+          anatomy(graft.tools.Serve.searchJson(ix, q, 10, "bm25", dfs))
+        // the first use of an input also runs its one-off bucket
+        // repartition; every later query reuses that map output
+        if (round == 2) assert(jobs == 1, s"'$q' ran $jobs jobs")
+        assertSameHits(parsed(lines.toSeq),
+          oracle.search(q, 10).map(h => (h.docId, h.score)), s"stored '$q'")
+      }
+    }
   }
 
   test("store round-trip preserves the index (config + stats + rows)") {

@@ -176,6 +176,32 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("searchJson escapes repo and path: every line parses, fields round-trip") {
+    import spark.implicits._
+    // a quote, a backslash and a control character in repo and path
+    val odd = Seq(
+      ("a\"quoted\"/repo", "dir\\sub/file.c", "computer science notes"),
+      ("tab\trepo", "line\u0001break/\"x\".md", "computer hash table"),
+      ("plain", "ok/path.md", "science of computer tables"))
+    val corpus = odd.zipWithIndex.map { case ((repo, path, content), i) =>
+      (i.toLong, repo, path, s"c$i", "md", content)
+    }.toDF("docId", "repo", "path", "commit", "lang", "content")
+    val small = IndexBuilder.build(corpus,
+      IndexConfig(bucketBits = 1, indexPartitions = 2))
+    val lines = graft.tools.Serve.searchJson(small, "computer", 5, "wand")
+    assert(lines.length == 3)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val byId = odd.zipWithIndex.map { case ((r, p, _), i) => i.toLong -> (r, p) }
+      .toMap
+    lines.foreach { l =>
+      val o = json.readTree(l)
+      val (repo, path) = byId(o.get("docId").asLong())
+      assert(o.get("repo").asText() == repo, l)
+      assert(o.get("path").asText() == path, l)
+      assert(o.get("score").isNumber && o.get("score").asDouble() > 0, l)
+    }
+  }
+
   test("all-stopword query degrades to its first token (reference rule)") {
     val e = QueryParser.parse("the of and").get
     assert(e == Term("the"))
