@@ -29,7 +29,6 @@ final case class IndexConfig(
     k1: Double = 1.2,
     b: Double = 0.75,
     indexPartitions: Int = 32,
-    persistIntermediate: Boolean = true,
     codec: String = "varbyte") {
   require(codec != "groupvarint" || blockSize % 4 == 0,
     "groupvarint blocks must be group-aligned (blockSize % 4 == 0)")
@@ -188,13 +187,24 @@ object IndexBuilder {
       .withColumn("pathTokens", Tokenizer.tokens(col("path")))
       .withColumn("docLen", size(col("bodyTokens")))
 
-  def buildDocs(corpus: DataFrame): DataFrame =
-    tokenized(corpus).select(
+  /** The docs registry: one row per document, from a corpus frame that
+    * carries its docLen. The one docs schema of every build. */
+  def docsRows(corpusWithDocLen: DataFrame): DataFrame =
+    corpusWithDocLen.select(
       col("docId"), col("repo"), col("path"), col("commit"), col("lang"),
       col("docLen"),
       StaticRank.staticRank(col("docLen"), col("path"), col("lang"))
         .cast("int").as("staticRank"),
       sha2(col("content"), 256).as("contentSha256"))
+
+  /** [[docsRows]] with docLen counted by the column tokenizer. */
+  def buildDocs(corpus: DataFrame): DataFrame = docsRows(tokenized(corpus))
+
+  /** Corpus stats (nDocs, avgDocLen) of a docs registry: one job. */
+  def corpusStats(docs: DataFrame): CorpusStats = {
+    val r = docs.agg(count(lit(1)), avg(col("docLen"))).head()
+    CorpusStats(r.getLong(0), r.getDouble(1))
+  }
 
   /** (field, term, docId, pos, docLen) token stream. Positions are
     * document-relative (see SURVEY.md §7.3); `path` tokens play the
@@ -285,22 +295,20 @@ object IndexBuilder {
     tf * (cfg.k1 + 1.0) /
       (tf + lit(cfg.k1) * (lit(1.0 - cfg.b) + lit(cfg.b) * docLen / avgdl))
 
-  /** (field, term, bucket, plist) aggregation of termDoc-shaped rows
-    * (must carry docLen) — the ONE formulation shared by the direct
-    * build, the per-segment builds, and the merge. Segment rows must
-    * stay byte-identical to the direct build, so the struct field
-    * order, the tfNorm arithmetic, and the bucket expression live here
-    * and nowhere else: an edit to any of them cannot desynchronize the
-    * three call sites. */
-  def plistRows(tdWithDocLen: DataFrame, stats: CorpusStats,
-      cfg: IndexConfig): DataFrame =
-    tdWithDocLen
-      .withColumn("tfNorm",
-        tfNorm(col("tf"), col("docLen"), stats.avgDocLen, cfg))
+  /** (field, term, bucket, plist) aggregation of termDoc-shaped rows,
+    * with `tfNorm` as each posting's tf-norm — the ONE formulation shared
+    * by the direct build, the segment writer and the merge. The direct
+    * build and the merge pass the BM25 [[tfNorm]]; segments pass a
+    * `lit(0.0)` placeholder, since the merge recomputes it from the
+    * corpus stats of the moment. The struct field order and the bucket
+    * expression live here and nowhere else, so merged rows stay
+    * byte-identical to direct ones. */
+  def plistRows(td: DataFrame, tfNorm: Column, cfg: IndexConfig): DataFrame =
+    td
       .withColumn("bucket", shiftright(col("docId"), cfg.bucketBits))
       .groupBy(col("field"), col("term"), col("bucket"))
       .agg(sort_array(collect_list(struct(
-        col("docId"), col("tf"), col("tfNorm"), col("posBlob"))))
+        col("docId"), col("tf"), tfNorm.as("tfNorm"), col("posBlob"))))
         .as("plist"))
 
   /** Per-bucket norms blobs (bucket, docIds, docLens) from the docs
@@ -370,49 +378,40 @@ object IndexBuilder {
       else shiftright(col("docId"), cfg.bucketBits))
 
   /** [[build]] plus a hook that releases the intermediates it persists
-    * (the corpus and termDoc). Call the hook once the tables are
-    * materialized where they are kept, e.g. pinned and counted: Spark
-    * keeps an already-loaded cache whose plan reads an intermediate when
-    * that intermediate is unpersisted, while an unloaded table would
-    * re-tokenize the corpus. */
+    * (the corpus, termDoc and the (docId, docLen) aggregate). Call the
+    * hook once the tables are materialized where they are kept, e.g.
+    * pinned and counted: Spark keeps an already-loaded cache whose plan
+    * reads an intermediate when that intermediate is unpersisted, while
+    * an unloaded table would re-tokenize the corpus. */
   def buildStaged(corpusWithDocId: DataFrame,
       cfg: IndexConfig = IndexConfig()): (IndexTables, () => Unit) = {
-    val corpus =
-      if (cfg.persistIntermediate)
-        corpusWithDocId.persist(StorageLevel.MEMORY_AND_DISK)
-      else corpusWithDocId
-
-    // termDoc is ALWAYS persisted (independent of persistIntermediate,
-    // which governs only the raw corpus): docLens, termStats, and plists
-    // all read it, so without the persist the corpus would be tokenized
-    // three times — the single most expensive stage of the build
+    val corpus = corpusWithDocId.persist(StorageLevel.MEMORY_AND_DISK)
+    // docLens, termStats and plists all read termDoc: without the
+    // persist the corpus would be tokenized three times
     val tdP = termDoc(corpus, cfg.codec).persist(StorageLevel.MEMORY_AND_DISK)
 
     // docLen comes back from the persisted termDoc rows — the corpus is
-    // tokenized exactly ONCE per build (docs w/ zero tokens: coalesce 0)
+    // tokenized exactly ONCE per build (docs w/ zero tokens: coalesce 0).
+    // Persisted: the stats job and the docs table both join it, and the
+    // aggregation and its exchange should run once
     val docLens = tdP.groupBy(col("docId"))
       .agg(first(col("docLen")).as("docLen"))
-    val docs = corpus.join(docLens, Seq("docId"), "left")
-      .withColumn("docLen", coalesce(col("docLen"), lit(0)))
-      .select(
-        col("docId"), col("repo"), col("path"), col("commit"), col("lang"),
-        col("docLen"),
-        StaticRank.staticRank(col("docLen"), col("path"), col("lang"))
-          .cast("int").as("staticRank"),
-        sha2(col("content"), 256).as("contentSha256"))
-    val statsRow = docs.agg(
-      count(lit(1)).as("n"), avg(col("docLen")).as("avgdl")).head()
-    val stats = CorpusStats(statsRow.getLong(0), statsRow.getDouble(1))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val docs = docsRows(corpus.join(docLens, Seq("docId"), "left")
+      .withColumn("docLen", coalesce(col("docLen"), lit(0))))
+    val stats = corpusStats(docs)
 
     val termStats = tdP.groupBy(col("field"), col("term"))
       .agg(count(lit(1)).as("df"))
 
-    val index = encodeIndexRows(plistRows(tdP, stats, cfg), cfg)
+    val index = encodeIndexRows(plistRows(tdP,
+      tfNorm(col("tf"), col("docLen"), stats.avgDocLen, cfg), cfg), cfg)
     val norms = buildNorms(docs, cfg)
 
     (IndexTables(docs, index, termStats, norms, stats, cfg), { () =>
-      if (cfg.persistIntermediate) corpus.unpersist()
+      corpus.unpersist()
       tdP.unpersist()
+      docLens.unpersist()
     })
   }
 }

@@ -6,19 +6,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.index.{CorpusStats, IndexBuilder, IndexConfig, IndexTables,
-  SegmentedBuild, StaticRank}
+import graft.index.{IndexBuilder, IndexConfig, IndexTables, SegmentedBuild}
 
 /** Incremental (streaming) index construction — the Structured-Streaming
   * re-expression of the reference's continuous crawler pipeline
   * (`/root/reference/src/crawler/crawler3.cpp:313-363,600-607`: pages
   * stream in, chunks accumulate, segments are flushed): new corpus files
-  * land in a directory; each micro-batch writes an independent,
-  * idempotent posting-run segment plus docs rows and a lineage record
-  * (batch replays after a crash rewrite the same segment — Structured
-  * Streaming's checkpoint + deterministic docIds make the whole build
-  * resumable); the serving index is a SegmentedBuild-style merge over
-  * all segments.
+  * land in a directory; each micro-batch writes its docs rows and an
+  * independent, idempotent `stream-<batchId>` segment with its lineage
+  * record through the batch build's segment writer
+  * (`SegmentedBuild.buildSegment`; batch replays after a crash rewrite
+  * the same segment — Structured Streaming's checkpoint + deterministic
+  * docIds make the whole build resumable); the serving index is
+  * `SegmentedBuild`'s assembly over all segments.
   *
   * Streaming docIds: a dense global rank needs the full corpus, so the
   * incremental path uses `xxhash64(repo, path, commit)` docIds — deterministic,
@@ -191,42 +191,12 @@ object StreamingIndexBuild {
         val withIds = withIds0
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-        val td = IndexBuilder.termDoc(withIds, cfg.codec)
-        val rows = IndexBuilder.encodeIndexRows(
-          td.withColumn("bucket", shiftright(col("docId"), cfg.bucketBits))
-            .groupBy(col("field"), col("term"), col("bucket"))
-            .agg(sort_array(collect_list(struct(
-              // tfNorm is recomputed at merge time from global stats;
-              // store a placeholder so the segment schema matches
-              col("docId"), col("tf"), lit(0.0).as("tfNorm"),
-              col("posBlob")))).as("plist")),
-          cfg)
-        rows.write.mode("overwrite")
-          .parquet(s"$indexDir/segments/seg=stream-$batchId")
-        val docs = withIds
-          .withColumn("docLen",
-            size(graft.index.Tokenizer.tokens(col("content"))))
-          .select(col("docId"), col("repo"), col("path"), col("commit"),
-            col("lang"), col("docLen"),
-            StaticRank.staticRank(col("docLen"), col("path"), col("lang"))
-              .cast("int").as("staticRank"),
-            sha2(col("content"), 256).as("contentSha256"))
-        docs.write.mode("overwrite")
-          .parquet(s"$indexDir/docs/seg=stream-$batchId")
-        Files.createDirectories(Paths.get(s"$indexDir/_lineage"))
-        // rows = documents actually indexed this batch (post-dedupe);
-        // cheap count off the persisted frame, no source re-scan.
-        // bytes/durationMs mirror the batch path's per-segment metrics
-        // (SegmentedBuild.buildSegment) so one lineage() scan audits
-        // both ingest paths with the same columns.
-        val segBytes =
-          SegmentedBuild.dirBytes(s"$indexDir/segments/seg=stream-$batchId")
-        Files.writeString(
-          Paths.get(s"$indexDir/_lineage/stream-$batchId.json"),
-          s"""{"segment":"stream-$batchId","rows":${withIds.count()},""" +
-            s""""bucketBits":${cfg.bucketBits},"bytes":$segBytes,""" +
-            s""""durationMs":${(System.nanoTime() - t0) / 1000000L},""" +
-            s""""status":"done"}""")
+          IndexBuilder.buildDocs(withIds).write.mode("overwrite")
+            .parquet(s"$indexDir/docs/seg=stream-$batchId")
+          // docs = documents actually indexed this batch (post-dedupe),
+          // a cheap count off the persisted frame
+          SegmentedBuild.buildSegment(IndexBuilder.termDoc(withIds, cfg.codec),
+            withIds.count(), indexDir, s"stream-$batchId", t0, cfg, None)
         } finally {
           withIds.unpersist()
           resolveCleanup() // release the cached final resolve round
@@ -253,25 +223,7 @@ object StreamingIndexBuild {
       s"docId hash collision detected (docId=${collided.headOption.map(_.get(0))}): " +
         "two distinct documents hashed to one 63-bit id; widen the id")
     // duplicates of the SAME doc across replayed segments are benign
-    val docs = rawDocs.dropDuplicates("docId")
-    val statsRow = docs.agg(
-      count(lit(1)).as("n"), avg(col("docLen")).as("avgdl")).head()
-    val stats = CorpusStats(statsRow.getLong(0), statsRow.getDouble(1))
-    val index = SegmentedBuild.merge(spark, indexDir, docs, stats, cfg)
-    val termStats = spark.read.parquet(s"$indexDir/segments")
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("n")).cast("bigint").as("df"))
-    val norms = docs
-      .withColumn("bucket", shiftright(col("docId"), cfg.bucketBits))
-      .groupBy(col("bucket"))
-      .agg(sort_array(collect_list(struct(col("docId"), col("docLen"))))
-        .as("dl"))
-      .select(col("bucket"),
-        graft.index.codec.VarbyteFunctions.encodeDelta(cfg.codec,
-          transform(col("dl"), x => x.getField("docId"))).as("docIds"),
-        graft.index.codec.VarbyteFunctions.encodePlain(cfg.codec,
-          transform(col("dl"), x => x.getField("docLen").cast("bigint")))
-          .as("docLens"))
-    IndexTables(docs, index, termStats, norms, stats, cfg)
+    SegmentedBuild.assemble(spark, indexDir, rawDocs.dropDuplicates("docId"),
+      cfg, None)
   }
 }

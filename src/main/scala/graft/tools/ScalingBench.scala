@@ -47,8 +47,7 @@ object ScalingBench {
       val t0 = System.nanoTime()
       val withIds = DocIds.assign(corpus, cpus * 2)
       val ix = IndexBuilder.build(withIds,
-        IndexConfig(bucketBits = 12, indexPartitions = cpus,
-          persistIntermediate = true))
+        IndexConfig(bucketBits = 12, indexPartitions = cpus))
       ix.index.write.mode("overwrite").format("noop").save()
       ix.norms.write.mode("overwrite").format("noop").save()
       val sec = (System.nanoTime() - t0) / 1e9

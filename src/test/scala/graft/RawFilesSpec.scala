@@ -216,12 +216,6 @@ class RawFilesSpec extends SparkSpec {
       RawFiles.corpus(spark, root).as[RepoFile], 2)
     graft.index.SegmentedBuild.build(corpusNow(), idir, 4, cfg)
 
-    def fp(ix: org.apache.spark.sql.DataFrame) = ix.collect().map { r =>
-      (r.getAs[String]("field"), r.getAs[String]("term"),
-        r.getAs[Long]("bucket")) ->
-        (r.getAs[Array[Byte]]("docIds").toSeq,
-          r.getAs[Array[Byte]]("tfs").toSeq)
-    }.toMap
     def lineageJson(s: Int) = java.nio.file.Files.readString(
       Paths.get(idir, "_lineage", s"seg-$s.json"))
 
@@ -254,8 +248,8 @@ class RawFilesSpec extends SparkSpec {
     // a from-scratch build of the edited corpus
     untouched.foreach(s => assert(lineageJson(s) == beforeA(s),
       s"segment $s was rebuilt despite an untouched repo set"))
-    assert(fp(rebuiltA.index) ==
-      fp(graft.index.IndexBuilder.build(corpusNow(), cfg).index))
+    IndexParity.assertSameTables(rebuiltA,
+      graft.index.IndexBuilder.build(corpusNow(), cfg))
 
     // PATH-SET change (new file): docIds are dense ranks, so ids shift
     // globally — the diff says so and everything invalidates
@@ -269,8 +263,53 @@ class RawFilesSpec extends SparkSpec {
     (0 until 4).foreach(s =>
       assert(!graft.index.SegmentedBuild.segmentDone(idir, s)))
     val rebuiltB = graft.index.SegmentedBuild.build(corpusNow(), idir, 4, cfg)
-    assert(fp(rebuiltB.index) ==
-      fp(graft.index.IndexBuilder.build(corpusNow(), cfg).index))
+    IndexParity.assertSameTables(rebuiltB,
+      graft.index.IndexBuilder.build(corpusNow(), cfg))
+  }
+
+  test("an edit that changes a document's length rebuilds only its segment") {
+    val root = Files.createTempDirectory("graft-grow-doc").toString
+    val mdir = Files.createTempDirectory("graft-grow-doc-m").toString
+    def write(p: String, text: String): Unit = {
+      val f = Paths.get(root, p)
+      Files.createDirectories(f.getParent)
+      Files.write(f, text.getBytes(StandardCharsets.UTF_8))
+      ()
+    }
+    (0 until 4).foreach { r =>
+      (0 until 6).foreach(i =>
+        write(s"repo$r/f$i.md", s"hash table entry $r $i lookup"))
+    }
+    RawFiles.ingest(spark, root, mdir)
+    val cfg = graft.index.IndexConfig(bucketBits = 4, indexPartitions = 2)
+    val idir = Files.createTempDirectory("graft-grow-doc-ix").toString
+    def corpusNow() = graft.index.DocIds.assign(
+      RawFiles.corpus(spark, root).as[RepoFile], 2)
+    val first = graft.index.SegmentedBuild.build(corpusNow(), idir, 4, cfg)
+
+    // same path set, but the edited document grows: avgDocLen drifts
+    write("repo1/f0.md", "hash table entry 1 0 lookup now runs much longer")
+    val diff = RawFiles.diffManifest(RawFiles.listing(spark, root),
+      RawFiles.readManifest(spark, mdir))
+    assert(!diff.pathSetChanged)
+    val inval = graft.index.SegmentedBuild
+      .invalidateSegments(idir, diff.changedRepos, 4)
+    assert(inval.size == 1)
+    // a lineage record's text and mtime: a rewrite changes the mtime
+    // even when the text comes out the same
+    def record(s: Int) = {
+      val p = Paths.get(idir, "_lineage", s"seg-$s.json")
+      (Files.readString(p), Files.getLastModifiedTime(p))
+    }
+    val untouched = (0 until 4).filterNot(inval.contains)
+    val before = untouched.map(s => s -> record(s)).toMap
+    val refreshed = graft.index.SegmentedBuild.build(corpusNow(), idir, 4, cfg)
+    assert(refreshed.stats.avgDocLen != first.stats.avgDocLen)
+    untouched.foreach(s => assert(record(s) == before(s),
+      s"segment $s was rebuilt, but none of its repos changed"))
+    assert(graft.index.SegmentedBuild.segmentDone(idir, inval.head))
+    IndexParity.assertSameTables(refreshed,
+      graft.index.IndexBuilder.build(corpusNow(), cfg))
   }
 
   test("symlinks are never followed into directories (no double ingest)") {

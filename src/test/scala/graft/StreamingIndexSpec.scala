@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
-
+import graft.IndexParity.{assertSame, assertSameTables, snapshot}
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.streaming.StreamingIndexBuild
@@ -16,13 +15,6 @@ class StreamingIndexSpec extends SparkSpec {
   import spark.implicits._
 
   val cfg: IndexConfig = IndexConfig(bucketBits = 5, indexPartitions = 4)
-
-  private def fingerprint(ix: DataFrame): Map[(String, String, Long), (Int, String, String)] =
-    ix.collect().map { r =>
-      def hex(c: String) = r.getAs[Array[Byte]](c).map("%02x".format(_)).mkString
-      (r.getAs[String]("field"), r.getAs[String]("term"), r.getAs[Long]("bucket")) ->
-        (r.getAs[Int]("n"), hex("docIds"), hex("tfs"))
-    }.toMap
 
   test("streamed segments merge to the exact batch-built index; new files append") {
     val corpusDir = Files.createTempDirectory("graft-stream-corpus").toString
@@ -38,7 +30,7 @@ class StreamingIndexSpec extends SparkSpec {
       StreamingIndexBuild.hashDocIds(
         spark.read.parquet(corpusDir)), cfg)
     assert(ix1.stats == direct1.stats)
-    assert(fingerprint(ix1.index) == fingerprint(direct1.index))
+    assertSameTables(ix1, direct1)
 
     val segsAfter1 = new java.io.File(s"$indexDir/segments").list().toSet
 
@@ -55,7 +47,7 @@ class StreamingIndexSpec extends SparkSpec {
     val direct2 = IndexBuilder.build(
       StreamingIndexBuild.hashDocIds(spark.read.parquet(corpusDir)), cfg)
     assert(ix2.stats == direct2.stats)
-    assert(fingerprint(ix2.index) == fingerprint(direct2.index))
+    assertSameTables(ix2, direct2)
 
     // queries run unchanged over the incrementally-built index
     val hits = graft.query.Engine.search(ix2, "computer science", 10).collect()
@@ -162,10 +154,7 @@ class StreamingIndexSpec extends SparkSpec {
       .write.mode("append").parquet(corpusDir)
     StreamingIndexBuild.start(spark, corpusDir, indexDir, cfg)
       .awaitTermination()
-    val ix1 = StreamingIndexBuild.mergedIndex(spark, indexDir, cfg)
-    val fp1 = fingerprint(ix1.index)
-    val df1 = ix1.termStats.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val before = snapshot(StreamingIndexBuild.mergedIndex(spark, indexDir, cfg))
 
     // the SAME 60 docs arrive again in a different parquet file → a new
     // micro-batch; the registry anti-join must drop all of them
@@ -175,13 +164,9 @@ class StreamingIndexSpec extends SparkSpec {
       .awaitTermination()
     val ix2 = StreamingIndexBuild.mergedIndex(spark, indexDir, cfg)
 
-    // stats, df, and the byte-level index are unchanged: no duplicated
-    // postings, no inflated df
-    assert(ix2.stats == ix1.stats)
-    val df2 = ix2.termStats.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(df2 == df1)
-    assert(fingerprint(ix2.index) == fp1)
+    // stats, df, norms, docs and the byte-level index are unchanged: no
+    // duplicated postings, no inflated df
+    assertSame(snapshot(ix2), before)
 
     // postings carry unique docIds per (field, term): decoded docId run
     // has no repeats

@@ -2,8 +2,7 @@ package graft.index
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
-
+import graft.IndexParity.assertSameTables
 import graft.SparkSpec
 import graft.corpus.CorpusGen
 
@@ -20,52 +19,28 @@ class SegmentedBuildSpec extends SparkSpec {
     DocIds.assign(CorpusGen.generate(spark, NDocs, 4), 4)
       .persist()
 
-  /** Canonical comparable form of an index DataFrame: hex blobs keyed by
-    * (field, term, bucket). */
-  private def fingerprint(ix: DataFrame): Map[(String, String, Long), (Int, String, String, Int)] =
-    ix.collect().map { r =>
-      val key = (r.getAs[String]("field"), r.getAs[String]("term"),
-        r.getAs[Long]("bucket"))
-      def hex(c: String) = r.getAs[Array[Byte]](c).map("%02x".format(_)).mkString
-      key -> (r.getAs[Int]("n"), hex("docIds"), hex("tfs"),
-        r.getAs[Seq[Any]]("blocks").size)
-    }.toMap
-
   test("segmented build + merge is byte-identical to the direct build") {
     val dir = Files.createTempDirectory("graft-seg").toString
     val direct = IndexBuilder.build(corpus, cfg)
     val seg = SegmentedBuild.build(corpus, dir, nSegments = 3, cfg)
     assert(seg.stats == direct.stats)
-    assert(fingerprint(seg.index) == fingerprint(direct.index))
-    // df parity through the segment-level aggregation path
-    val dfDirect = direct.termStats.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val dfSeg = seg.termStats.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(dfSeg == dfDirect)
+    // every table, df through the segment-level aggregation path included
+    assertSameTables(seg, direct)
   }
 
   test("interrupted build resumes: done segments skipped, output identical") {
     val dir = Files.createTempDirectory("graft-resume").toString
-    val docs = IndexBuilder.buildDocs(corpus)
-    val statsRow = docs.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.avg(
-        org.apache.spark.sql.functions.col("docLen"))).head()
-    val stats = CorpusStats(statsRow.getLong(0), statsRow.getDouble(1))
 
     // phase 1 of an interrupted run: only segment 0 completes
-    val n0 = SegmentedBuild.buildSegment(corpus, dir, 0, 3, stats, cfg)
+    val n0 = SegmentedBuild.buildSegment(corpus, dir, 0, 3, cfg)
     assert(n0 >= 0)
     assert(SegmentedBuild.segmentDone(dir, 0))
     assert(!SegmentedBuild.segmentDone(dir, 1))
 
     // the resumed full build must skip segment 0 (buildSegment returns -1)
-    assert(SegmentedBuild.buildSegment(corpus, dir, 0, 3, stats, cfg) == -1L)
+    assert(SegmentedBuild.buildSegment(corpus, dir, 0, 3, cfg) == -1L)
     val resumed = SegmentedBuild.build(corpus, dir, nSegments = 3, cfg)
-    val direct = IndexBuilder.build(corpus, cfg)
-    assert(fingerprint(resumed.index) == fingerprint(direct.index))
+    assertSameTables(resumed, IndexBuilder.build(corpus, cfg))
 
     // lineage: one row per segment with the build metadata AND metrics
     // (docs / postings / bytes / durationMs — north rule: per-partition
@@ -92,7 +67,17 @@ class SegmentedBuildSpec extends SparkSpec {
       bucketBits = cfg.bucketBits))
     // and the full 2-way rerun still matches the direct build exactly
     val re = SegmentedBuild.build(corpus, dir, nSegments = 2, cfg)
-    val direct = IndexBuilder.build(corpus, cfg)
-    assert(fingerprint(re.index) == fingerprint(direct.index))
+    assertSameTables(re, IndexBuilder.build(corpus, cfg))
+  }
+
+  test("rerun with a different codec rebuilds instead of decoding stale segments") {
+    val dir = Files.createTempDirectory("graft-recodec").toString
+    SegmentedBuild.build(corpus, dir, nSegments = 3, cfg)
+    val gv = cfg.copy(codec = "groupvarint")
+    // a varbyte segment must NOT count as done for a group-varint rerun
+    assert(!SegmentedBuild.segmentDone(dir, 0, nSegments = 3,
+      bucketBits = gv.bucketBits, codec = gv.codec))
+    val re = SegmentedBuild.build(corpus, dir, nSegments = 3, gv)
+    assertSameTables(re, IndexBuilder.build(corpus, gv))
   }
 }
