@@ -41,8 +41,10 @@ object SparkEntry {
     * query reuses the same cached index/docs/termStats/norms instead of
     * re-running the encode stages per action (the reference mmap's its
     * chunks once the same way, `IndexFileReader.h:279-317`). The index,
-    * norms and docs are pinned [[IndexBuilder.bucketPartitioned]], so a
-    * BM25 query is one shuffle-free job over them. The tables are
+    * norms and docs are pinned [[IndexBuilder.bucketPartitioned]], so the
+    * serving shards the first BM25 query builds from them
+    * (`IndexTables.shards`) take no exchange, and every BM25 query is one
+    * shuffle-free job over those shards. The tables are
     * materialized here, and the build's own cached intermediates are
     * released once they are. */
   def index(spark: SparkSession, sfDir: String): IndexTables =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.index.codec.VarbyteFunctions._
+import graft.index.codec.VarbyteFunctions.{encodeDelta, encodePlain}
 
 /** Build configuration.
   *
@@ -152,10 +152,11 @@ final case class IndexTables(
     norms: DataFrame,
     stats: CorpusStats,
     config: IndexConfig) {
-  /** The BM25 executor's bucket-partitioned row inputs over these
-    * tables, built on first use and kept for the life of the handle. */
-  private[graft] lazy val wandInputs: graft.query.Wand.Inputs =
-    new graft.query.Wand.Inputs(this)
+  /** The BM25 executor's per-partition serving shards over these
+    * tables, built by the first query and kept for the life of the
+    * handle. */
+  private[graft] lazy val shards: org.apache.spark.rdd.RDD[graft.query.Shard] =
+    graft.query.Shard.of(this)
 }
 
 /** Inverted-index construction as declarative Dataset transforms.
@@ -338,30 +339,6 @@ object IndexBuilder {
         graft.index.codec.PostingRunEncode(col("plist"), cfg.blockSize,
           cfg.codec).as("enc"))
       .select(col("field"), col("term"), col("bucket"), col("enc.*"))
-
-  /** Legacy higher-order-function formulation of the same encoding —
-    * kept as the executable specification of [[encodeIndexRows]] (the
-    * codec spec asserts byte-identical output). Varbyte-only: the
-    * group-varint path is specified by its own codec round-trip tests. */
-  def encodePostingRun(plist: Column, cfg: IndexConfig): Seq[Column] = {
-    val n = size(plist)
-    val nBlocks = ceil(n.cast("double") / cfg.blockSize).cast("int")
-    val blocks = transform(sequence(lit(0), nBlocks - 1), i => struct(
-      element_at(plist, least((i + 1) * cfg.blockSize, n))
-        .getField("docId").as("maxDocId"),
-      (i * cfg.blockSize).as("startIdx"),
-      aggregate(slice(plist, i * cfg.blockSize + 1, lit(cfg.blockSize)),
-        lit(0.0), (acc, x) => greatest(acc, x.getField("tfNorm")))
-        .as("blockMax")))
-    Seq(
-      n.as("n"),
-      varbyteEncodeDelta(transform(plist, x => x.getField("docId")))
-        .as("docIds"),
-      varbyteEncode(transform(plist, x => x.getField("tf").cast("bigint")))
-        .as("tfs"),
-      transform(plist, x => x.getField("posBlob")).as("positions"),
-      blocks.as("blocks"))
-  }
 
   def build(corpusWithDocId: DataFrame, cfg: IndexConfig = IndexConfig()): IndexTables =
     buildStaged(corpusWithDocId, cfg)._1

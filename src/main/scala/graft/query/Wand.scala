@@ -1,11 +1,8 @@
 package graft.query
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.{IndexBuilder, IndexTables}
 
@@ -16,15 +13,18 @@ import graft.index.{IndexBuilder, IndexTables}
   * norms and docs — are hash-partitioned by that bucket into the same
   * partitions ([[IndexBuilder.bucketPartitioned]]), so every bucket is a
   * self-contained mini-index whose postings, norms and doc rows sit in
-  * one partition. A query is therefore ONE Spark job with no shuffle
-  * (the reference's scatter-gather: broadcast the query to the shards,
-  * merge their top-k): one `zipPartitions` task per partition filters
-  * the query's term rows, runs WAND over each of its buckets into one
-  * partition-wide top-k, and attaches repo/path to its winners from the
-  * co-located docs rows; the driver merges at most k·partitions hits.
-  * Neither postings nor norms are shuffled. The row RDDs are built once
-  * per handle ([[Inputs]]), so a query pays no DataFrame construction or
-  * planning either.
+  * one partition. Once per handle each partition becomes one persisted
+  * [[Shard]]: a (field, term) dictionary over its posting rows, norms
+  * keyed by bucket and a sorted docId → (repo, path) table. A query is
+  * therefore ONE Spark job with no shuffle (the reference's
+  * scatter-gather: broadcast the query to the shards, merge their
+  * top-k): one `mapPartitions` task per shard looks up the query's term
+  * rows, runs WAND over each of their buckets into one partition-wide
+  * top-k, and attaches repo/path to its winners by binary search; the
+  * driver merges at most k·partitions hits. A task touches the query's
+  * posting rows, their buckets' norms and k docs entries — never the
+  * rest of its partition — and a query pays no DataFrame construction
+  * or planning.
   *
   * Pruning hierarchy (reference analog: seek tables,
   * `/root/reference/src/inverted_index/IndexFile.h:242-254`; WAND is the
@@ -56,14 +56,6 @@ import graft.index.{IndexBuilder, IndexTables}
   */
 object Wand {
 
-  /** One (term, bucket) posting row as the cursors read it; `positions`
-    * is null unless the term is a member of one of the query's phrases. */
-  final case class IxRow(term: String, bucket: Long, n: Int,
-      docIds: Array[Byte], tfs: Array[Byte],
-      positions: Array[Array[Byte]],
-      blockMaxes: Array[Double], blockMaxDocIds: Array[Long],
-      rowMax: Double)
-
   /** One ranked hit with its document's repo and path. */
   final case class Ranked(docId: Long, score: Double, repo: String,
       path: String)
@@ -74,38 +66,11 @@ object Wand {
     StructField("score", DoubleType, nullable = false),
     StructField("repo", StringType), StructField("path", StringType)))
 
-  /** The serving inputs of one handle: its tables projected to what the
-    * executor reads, [[IndexBuilder.bucketPartitioned]], and turned into
-    * row RDDs once (memoized as `IndexTables.wandInputs`). On a handle pinned
-    * co-partitioned the RDDs scan the cached tables directly; on any
-    * other handle (e.g. `IndexStore.read`) building them runs the bucket
-    * repartition once, and later queries reuse its map output. */
-  final class Inputs(ix: IndexTables) {
-    private def aligned(df: DataFrame): DataFrame =
-      IndexBuilder.bucketPartitioned(df, ix.config)
-
-    /** The index scan the executor reads; `positions` (the largest blob
-      * column) only when a query has a phrase. */
-    def postingScan(withPositions: Boolean): DataFrame =
-      aligned(ix.index.select((Seq("field", "term", "bucket", "n",
-        "docIds", "tfs", "blocks", "rowMax") ++
-        (if (withPositions) Seq("positions") else Nil)).map(col): _*))
-
-    private val blockType =
-      ix.index.schema("blocks").dataType.asInstanceOf[ArrayType]
-        .elementType.asInstanceOf[StructType]
-    private[Wand] val maxDocIdAt = blockType.fieldIndex("maxDocId")
-    private[Wand] val blockMaxAt = blockType.fieldIndex("blockMax")
-
-    lazy val postings: RDD[InternalRow] =
-      postingScan(false).queryExecution.toRdd
-    lazy val postingsWithPositions: RDD[InternalRow] =
-      postingScan(true).queryExecution.toRdd
-    lazy val norms: RDD[InternalRow] = aligned(ix.norms.select(
-      col("bucket"), col("docIds"), col("docLens"))).queryExecution.toRdd
-    lazy val docs: RDD[InternalRow] = aligned(ix.docs.select(
-      col("docId"), col("repo"), col("path"))).queryExecution.toRdd
-  }
+  /** One partition's answer: its top-k hits, plus the work it did — the
+    * posting rows its dictionary lookups returned and the posting
+    * position lists it decoded. */
+  private[graft] final case class PartitionHits(partition: Int,
+      rowsExamined: Int, positionsDecoded: Long, hits: Array[Ranked])
 
   /** One term's cursor over a bucket row, decoded BLOCK-AT-A-TIME: the
     * blob is never fully materialized. Seeks jump via the block
@@ -116,21 +81,24 @@ object Wand {
     * delta base = previous block's maxDocId). A WAND run that
     * block-max-prunes most of a hot term's postings pays decode cost
     * only for the blocks it actually lands in. */
-  private final class Cursor(row: IxRow, val idf: Double, val k1: Double,
-      val b: Double, val avgdl: Double, blockSize: Int,
-      codec: graft.index.codec.PostingCodec) {
-    val rowUb: Double = idf * row.rowMax
-    private val n = row.n
-    private val nBlocks = row.blockMaxDocIds.length
+  private final class Cursor(s: Shard, r: Int, val term: String,
+      val idf: Double, val k1: Double, val b: Double, val avgdl: Double,
+      blockSize: Int, codec: graft.index.codec.PostingCodec) {
+    val rowUb: Double = idf * s.rowMax(r)
+    private val n = s.rowN(r)
+    private val docIdBlob = s.rowDocIds(r)
+    private val tfBlob = s.rowTfs(r)
+    private val b0 = s.rowBlock(r) // this row's first block in the shard
+    private val nBlocks = s.rowBlock(r + 1) - b0
+    private def maxDocIdOf(bi: Int): Long = s.blockMaxDocId(b0 + bi)
     private val ids = new Array[Long](blockSize)
     private val tfs = new Array[Long](blockSize)
     private var cb = -1        // currently decoded block (-1 = none yet)
-    private var idByte = codec.startOffset(row.docIds)
-    private var tfByte = codec.startOffset(row.tfs)
+    private var idByte = codec.startOffset(docIdBlob)
+    private var tfByte = codec.startOffset(tfBlob)
     private var nextBlock = 0  // first block not yet passed byte-wise
     private var gi = 0         // global posting index (monotone)
 
-    def term: String = row.term
     def exhausted: Boolean = gi >= n
 
     /** Decode (forward-only) the block holding posting index `i`. */
@@ -139,15 +107,15 @@ object Wand {
       if (tb == cb) return
       if (tb > nextBlock) {
         val skip = (tb - nextBlock) * blockSize
-        idByte = codec.skipValues(row.docIds, idByte, skip)
-        tfByte = codec.skipValues(row.tfs, tfByte, skip)
+        idByte = codec.skipValues(docIdBlob, idByte, skip)
+        tfByte = codec.skipValues(tfBlob, tfByte, skip)
         nextBlock = tb
       }
       val len = math.min(blockSize, n - tb * blockSize)
-      val base = if (tb == 0) 0L else row.blockMaxDocIds(tb - 1)
-      idByte = codec.decodeBlockAt(row.docIds, idByte, len, delta = true,
+      val base = if (tb == 0) 0L else maxDocIdOf(tb - 1)
+      idByte = codec.decodeBlockAt(docIdBlob, idByte, len, delta = true,
         base, ids)
-      tfByte = codec.decodeBlockAt(row.tfs, tfByte, len, delta = false,
+      tfByte = codec.decodeBlockAt(tfBlob, tfByte, len, delta = false,
         0L, tfs)
       cb = tb
       nextBlock = tb + 1
@@ -155,15 +123,15 @@ object Wand {
 
     def docId: Long = { loadBlockFor(gi); ids(gi - cb * blockSize) }
     def tf: Long = { loadBlockFor(gi); tfs(gi - cb * blockSize) }
-    /** Decoded sorted positions of the CURRENT posting (null-positions
-      * rows — non-phrase terms — never call this). */
+    /** Decoded sorted positions of the CURRENT posting (only phrase
+      * members' cursors are asked). */
     def positionsHere: Array[Long] =
-      codec.decode(row.positions(gi), delta = true)
+      codec.decode(s.positions(r, gi), delta = true)
     /** Upper bound of current block (idf · blockMax) — metadata only,
       * no decode. */
     def blockUb: Double = {
       val bi = gi / blockSize
-      if (bi < row.blockMaxes.length) idf * row.blockMaxes(bi) else rowUb
+      if (bi < nBlocks) idf * s.blockMax(b0 + bi) else rowUb
     }
     def next(): Unit = gi += 1
     /** Advance to first posting with docId >= target: block-directory
@@ -171,13 +139,13 @@ object Wand {
     def seek(target: Long): Unit = {
       if (gi >= n || docId >= target) return
       var tb = gi / blockSize
-      if (row.blockMaxDocIds(tb) < target) {
+      if (maxDocIdOf(tb) < target) {
         // first block (beyond tb) whose maxDocId reaches the target
         var lo = tb + 1
         var hi = nBlocks
         while (lo < hi) {
           val mid = (lo + hi) >>> 1
-          if (row.blockMaxDocIds(mid) < target) lo = mid + 1 else hi = mid
+          if (maxDocIdOf(mid) < target) lo = mid + 1 else hi = mid
         }
         if (lo >= nBlocks) { gi = n; return } // past the last posting
         tb = lo
@@ -234,6 +202,8 @@ object Wand {
   private final class ConstraintEval(expr: QueryExpr,
       cursorOf: Map[String, Cursor]) {
     val required: Set[String] = expr.requiredTerms
+    /** Posting position lists decoded so far (phrase checks only). */
+    var positionsDecoded = 0L
 
     private def present(t: String, doc: Long): Boolean =
       cursorOf.get(t) match {
@@ -242,8 +212,10 @@ object Wand {
       }
 
     private def phraseAt(ts: Seq[String], doc: Long): Boolean =
-      ts.forall(present(_, doc)) &&
+      ts.forall(present(_, doc)) && {
+        positionsDecoded += ts.size
         Engine.phraseMatches(ts.map(t => cursorOf(t).positionsHere))
+      }
 
     private def eval(e: QueryExpr, doc: Long): Boolean = e match {
       case Term(t)      => present(t, doc)
@@ -374,7 +346,7 @@ object Wand {
   def topK(ix: IndexTables, terms: Seq[String], k: Int = 32,
       field: String = "body",
       dfs: Option[DfDict] = None): DataFrame =
-    scored(ix, run(ix, terms.distinct.sorted, None, k, field, dfs))
+    scored(ix, merge(run(ix, terms.distinct.sorted, None, k, field, dfs), k))
 
   /** Constraint-aware top-k: candidates must satisfy the full boolean
     * expression (AND / OR / NOT / phrase / parens) — the doc set of
@@ -383,7 +355,7 @@ object Wand {
   def topKExpr(ix: IndexTables, expr: QueryExpr, k: Int = 32,
       field: String = "body",
       dfs: Option[DfDict] = None): DataFrame =
-    scored(ix, hitsExpr(ix, expr, k, field, dfs))
+    scored(ix, merge(partitionHitsExpr(ix, expr, k, field, dfs), k))
 
   /** Full ranked BM25 search: parse → constraint-aware WAND with
     * repo/path attached; (docId, score, repo, path) in (score desc,
@@ -401,17 +373,28 @@ object Wand {
     * the serving loop formats these directly. */
   def hits(ix: IndexTables, query: String, k: Int = 32,
       dfs: Option[DfDict] = None): Array[Ranked] =
+    merge(partitionHits(ix, query, k, dfs), k)
+
+  /** [[hits]] before the driver merge: one entry per shard, in
+    * partition order (none for a query without scoring terms). */
+  private[graft] def partitionHits(ix: IndexTables, query: String, k: Int,
+      dfs: Option[DfDict]): Array[PartitionHits] =
     QueryParser.parse(query) match {
       case None       => Array.empty
-      case Some(expr) => hitsExpr(ix, expr, k, "body", dfs)
+      case Some(expr) => partitionHitsExpr(ix, expr, k, "body", dfs)
     }
 
-  private def hitsExpr(ix: IndexTables, expr: QueryExpr, k: Int,
-      field: String, dfs: Option[DfDict]): Array[Ranked] = {
+  private def partitionHitsExpr(ix: IndexTables, expr: QueryExpr, k: Int,
+      field: String, dfs: Option[DfDict]): Array[PartitionHits] = {
     val scoring = expr.terms.distinct.sorted
     if (scoring.isEmpty) Array.empty
     else run(ix, scoring, Some(expr), k, field, dfs)
   }
+
+  /** The driver merge: the best k of every shard's top-k. */
+  private def merge(parts: Array[PartitionHits], k: Int): Array[Ranked] =
+    parts.flatMap(_.hits).sortWith((x, y) =>
+      x.score > y.score || (x.score == y.score && x.docId < y.docId)).take(k)
 
   private def scored(ix: IndexTables, hits: Array[Ranked]): DataFrame = {
     val spark = ix.index.sparkSession
@@ -421,7 +404,7 @@ object Wand {
 
   private def run(ix: IndexTables, scoring: Seq[String],
       exprOpt: Option[QueryExpr], k: Int, field: String,
-      dfDict: Option[DfDict]): Array[Ranked] = {
+      dfDict: Option[DfDict]): Array[PartitionHits] = {
     val scoringSet = scoring.toSet
     val allTs =
       (scoring ++ exprOpt.map(_.allTerms).getOrElse(Seq.empty)).distinct.sorted
@@ -446,99 +429,60 @@ object Wand {
     val avgdl = ix.stats.avgDocLen
     val codec = graft.index.codec.PostingCodec(ix.config.codec)
 
-    val in = ix.wandInputs
-    val maxDocIdAt = in.maxDocIdAt
-    val blockMaxAt = in.blockMaxAt
-    // a phrase-free query never reads (or decodes) the positions column
-    val postings =
-      if (phraseTerms.isEmpty) in.postings else in.postingsWithPositions
-
-    val partitionHits = postings.zipPartitions(in.norms, in.docs) {
-      (pIt, nIt, dIt) =>
-        val fieldU = UTF8String.fromString(field)
-        val termsU = allTs.map(UTF8String.fromString).toSet
-        // this partition's posting rows of the query's terms, by bucket
-        // (rows are reused by the scan: copy out what is kept)
-        val byBucket = pIt
-          .filter(r => r.getUTF8String(0) == fieldU &&
-            termsU(r.getUTF8String(1)))
-          .map { r =>
-            val term = r.getUTF8String(1).toString
-            val blocks = r.getArray(6)
-            val nb = blocks.numElements()
-            val pos =
-              if (!phraseTerms(term)) null
-              else {
-                val a = r.getArray(8)
-                Array.tabulate(a.numElements())(a.getBinary)
-              }
-            IxRow(term, r.getLong(2), r.getInt(3), r.getBinary(4),
-              r.getBinary(5), pos,
-              Array.tabulate(nb)(i => blocks.getStruct(i, 3).getDouble(blockMaxAt)),
-              Array.tabulate(nb)(i => blocks.getStruct(i, 3).getLong(maxDocIdAt)),
-              r.getDouble(7))
-          }
-          .toArray.groupBy(_.bucket)
+    ix.shards.mapPartitionsWithIndex { (partition, shards) =>
+      shards.map { s =>
+        // the dictionary probe: this shard's rows of the query's terms
+        val found = allTs.flatMap(t => s.rowsOf(field, t).map(t -> _))
+        val byBucket = found.groupBy { case (_, r) => s.rowBucket(r) }
           // a bucket with no scoring row, or missing a required term's
           // row, cannot contain a matching doc
           .filter { case (_, rs) =>
-            rs.exists(r => scoringSet(r.term)) &&
-              requiredTs.forall(t => rs.exists(_.term == t))
+            rs.exists(r => scoringSet(r._1)) &&
+              requiredTs.forall(t => rs.exists(_._1 == t))
           }
-        if (byBucket.isEmpty) Iterator.empty
-        else {
-          val normsOf = nIt.filter(r => byBucket.contains(r.getLong(0)))
-            .map(r => r.getLong(0) -> ((r.getBinary(1), r.getBinary(2))))
-            .toMap
-          val topK = new TopK(k)
-          byBucket.toSeq.sortBy(_._1).foreach { case (bucket, rs) =>
-            // LOUD on a bucket or docId missing from the norms: a silent
-            // skip or docLen-0 fallback would drop or re-rank hits — a
-            // partitioning or merge bug must fail, not answer wrongly
-            // (index+norms are built together, so this cannot fire on a
-            // healthy index)
-            val (idBlob, lenBlob) = normsOf.getOrElse(bucket,
-              throw new IllegalStateException(
-                s"bucket $bucket has postings but no norms row in its partition"))
-            lazy val nIds = codec.decode(idBlob, delta = true)
-            lazy val nLens = codec.decode(lenBlob, delta = false)
-            val docLenAt: Long => Long = { d =>
-              val p = java.util.Arrays.binarySearch(nIds, d)
-              require(p >= 0,
-                s"docId $d in postings of bucket $bucket but absent from norms")
-              nLens(p)
-            }
-            def mkCursor(r: IxRow): Cursor =
-              new Cursor(r, idfs.getOrElse(r.term, 0.0), k1, b, avgdl,
-                blockSize, codec)
-            val cursors = rs.filter(r => scoringSet(r.term)).map(mkCursor)
-            val matcher = exprOpt.map { e =>
-              // ONE cursor per term: positive terms reuse the scoring
-              // cursors (shared monotone position), exclude-side terms
-              // get their own idf-0 cursors
-              val byTerm = cursors.map(c => c.term -> c).toMap ++
-                rs.filter(r => !scoringSet(r.term))
-                  .map(r => r.term -> mkCursor(r)).toMap
-              new ConstraintEval(e, byTerm)
-            }
-            bucketTopK(cursors, matcher, docLenAt, topK)
+        val topK = new TopK(k)
+        var positionsDecoded = 0L
+        byBucket.toSeq.sortBy(_._1).foreach { case (bucket, rs) =>
+          // LOUD on a bucket or docId missing from the norms: a silent
+          // skip or docLen-0 fallback would drop or re-rank hits — a
+          // partitioning or merge bug must fail, not answer wrongly
+          // (index+norms are built together, so this cannot fire on a
+          // healthy index)
+          val (idBlob, lenBlob) = s.norms(bucket).getOrElse(
+            throw new IllegalStateException(
+              s"bucket $bucket has postings but no norms row in its partition"))
+          lazy val nIds = codec.decode(idBlob, delta = true)
+          lazy val nLens = codec.decode(lenBlob, delta = false)
+          val docLenAt: Long => Long = { d =>
+            val p = java.util.Arrays.binarySearch(nIds, d)
+            require(p >= 0,
+              s"docId $d in postings of bucket $bucket but absent from norms")
+            nLens(p)
           }
-          val winners = topK.drain().toMap
-          // repo/path for the winners only, from the co-located docs rows
-          val attached = scala.collection.mutable.HashMap.empty[Long, (String, String)]
-          dIt.foreach { r =>
-            val d = r.getLong(0)
-            if (winners.contains(d) && !attached.contains(d))
-              attached(d) = (Option(r.getUTF8String(1)).map(_.toString).orNull,
-                Option(r.getUTF8String(2)).map(_.toString).orNull)
+          def mkCursor(t: String, r: Int): Cursor =
+            new Cursor(s, r, t, idfs.getOrElse(t, 0.0), k1, b, avgdl,
+              blockSize, codec)
+          val cursors = rs.collect {
+            case (t, r) if scoringSet(t) => mkCursor(t, r)
+          }.toArray
+          val matcher = exprOpt.map { e =>
+            // ONE cursor per term: positive terms reuse the scoring
+            // cursors (shared monotone position), exclude-side terms
+            // get their own idf-0 cursors
+            val byTerm = cursors.map(c => c.term -> c).toMap ++
+              rs.collect { case (t, r) if !scoringSet(t) => t -> mkCursor(t, r) }
+            new ConstraintEval(e, byTerm)
           }
-          winners.iterator.map { case (d, s) =>
-            val (repo, path) = attached.getOrElse(d, (null, null))
-            Ranked(d, s, repo, path)
-          }
+          bucketTopK(cursors, matcher, docLenAt, topK)
+          matcher.foreach(positionsDecoded += _.positionsDecoded)
         }
+        // repo/path for the winners only: a binary search each
+        val winners = topK.drain().map { case (d, sc) =>
+          val (repo, path) = s.doc(d)
+          Ranked(d, sc, repo, path)
+        }.toArray
+        PartitionHits(partition, found.size, positionsDecoded, winners)
+      }
     }.collect()
-    partitionHits.sortWith((x, y) =>
-      x.score > y.score || (x.score == y.score && x.docId < y.docId)).take(k)
   }
 }

@@ -49,27 +49,29 @@ class PlanSpec extends SparkSpec {
 
   test("non-phrase WAND serving path prunes the positions column") {
     val ix = IndexStore.read(spark, dir)
-    // the serving scan a phrase-free query runs on must never read
-    // positions: the parquet scan's ReadSchema excludes the (largest)
-    // blob column entirely
-    val scan = ix.wandInputs.postingScan(withPositions = false)
-    val readSchemas = formatted(scan).linesIterator
-      .filter(_.trim.startsWith("ReadSchema")).mkString("\n")
-    assert(!readSchemas.contains("positions"), readSchemas)
-    assert(readSchemas.contains("docIds"), readSchemas)
-    // while the phrase input legitimately reads them
-    assert(formatted(ix.wandInputs.postingScan(withPositions = true))
-      .contains("positions"), "phrase scan lost positions")
+    val dfs = Some(graft.query.Wand.dfDictionary(ix))
+    // a phrase-free query decodes no posting's positions in any shard
+    Seq("computer science", "hash table NOT parse", "(parse OR tree) AND if")
+      .foreach { q =>
+        val parts = graft.query.Wand.partitionHits(ix, q, 10, dfs)
+        assert(parts.nonEmpty && parts.forall(_.positionsDecoded == 0),
+          s"'$q' decoded ${parts.map(_.positionsDecoded).sum} position lists")
+      }
+    // while a phrase query legitimately decodes them
+    assert(graft.query.Wand.partitionHits(ix, "\"computer science\"", 10, dfs)
+      .map(_.positionsDecoded).sum > 0, "phrase query decoded no positions")
   }
 
   /** Runs `f` in its own job group; returns its value, the Spark jobs it
-    * ran and the shuffle bytes those jobs' tasks read and wrote. */
-  private def anatomy[T](f: => T): (T, Int, Long) = {
+    * ran, the tasks those jobs ran and the shuffle bytes those tasks
+    * read and wrote. */
+  private def anatomy[T](f: => T): (T, Int, Int, Long) = {
     import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val group = s"anatomy-${System.nanoTime()}"
     val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val shuffleBytes = new AtomicLong
     val listener = new SparkListener {
@@ -80,10 +82,13 @@ class PlanSpec extends SparkSpec {
           e.stageIds.foreach(stages.add(_))
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          shuffleBytes.addAndGet(
-            e.taskMetrics.shuffleReadMetrics.totalBytesRead +
-              e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          if (e.taskMetrics != null)
+            shuffleBytes.addAndGet(
+              e.taskMetrics.shuffleReadMetrics.totalBytesRead +
+                e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        }
     }
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
@@ -91,7 +96,7 @@ class PlanSpec extends SparkSpec {
     try {
       val r = f
       org.apache.spark.ListenerBusDrain(sc)
-      (r, jobs.get, shuffleBytes.get)
+      (r, jobs.get, tasks.get, shuffleBytes.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -126,6 +131,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** A documents.parquet in the driver's testdata shape, with docIds
+    * 0 until `texts.size`. */
+  private def documentsDir(texts: Seq[String]): String = {
+    import spark.implicits._
+    val sfDir = Files.createTempDirectory("graft-docs").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, s"repo${i % 5}", "txt", t) }
+      .toDF("doc_id", "source", "lang", "text")
+      .write.parquet(s"$sfDir/documents.parquet")
+    sfDir
+  }
+
   test("pinned serving: one job, no shuffle, only the four tables cached") {
     // a documents.parquet in the driver's testdata shape
     val sfDir = Files.createTempDirectory("graft-pinned").toString
@@ -147,15 +163,27 @@ class PlanSpec extends SparkSpec {
       stored.mkString("\n"))
     val dfs = Some(graft.query.Wand.dfDictionary(ix))
     val oracle = oracleOf(sfDir)
-    Seq("computer science", "hash table NOT parse", "\"hash table\"",
-      "(parse OR tree) AND if").foreach { q =>
+    val qs = Seq("computer science", "hash table NOT parse", "\"hash table\"",
+      "(parse OR tree) AND if")
+    qs.foreach { q =>
       graft.tools.Serve.searchJson(ix, q, 10, "wand", dfs) // warm
-      val (lines, jobs, shuffleBytes) =
+      val (lines, jobs, tasks, shuffleBytes) =
         anatomy(graft.tools.Serve.searchJson(ix, q, 10, "wand", dfs))
       assert(jobs == 1, s"'$q' ran $jobs jobs")
+      assert(tasks == ix.config.indexPartitions, s"'$q' ran $tasks tasks")
       assert(shuffleBytes == 0, s"'$q' shuffled $shuffleBytes bytes")
       assertSameHits(parsed(lines.toSeq), oracle(q, 10), s"pinned '$q'")
     }
+    // queries add exactly one persistent RDD, the serving shards, fully
+    // cached, and none per query
+    val shards = sc.getPersistentRDDs.keySet -- before -- pinned
+    assert(shards.size == 1, sc.getPersistentRDDs.values.mkString("\n"))
+    val shardStore = sc.getRDDStorageInfo.filter(r => shards(r.id))
+    assert(shardStore.length == 1 && shardStore.forall(r =>
+      r.numCachedPartitions == r.numPartitions &&
+        r.numPartitions == ix.config.indexPartitions), shardStore.mkString("\n"))
+    qs.foreach(graft.tools.Serve.searchJson(ix, _, 10, "wand", dfs))
+    assert(sc.getPersistentRDDs.keySet -- before -- pinned == shards)
   }
 
   test("stored-handle serving: one job per query after the first") {
@@ -167,25 +195,177 @@ class PlanSpec extends SparkSpec {
       "\"computer science\"")
     (1 to 2).foreach { round =>
       qs.foreach { q =>
-        val (lines, jobs, _) =
+        val (lines, jobs, tasks, shuffleBytes) =
           anatomy(graft.tools.Serve.searchJson(ix, q, 10, "bm25", dfs))
-        // the first use of an input also runs its one-off bucket
-        // repartition; every later query reuses that map output
-        if (round == 2) assert(jobs == 1, s"'$q' ran $jobs jobs")
+        // the first use also runs the one-off bucket repartition that
+        // builds the shards; every later query is one task per shard
+        // over the cached shards, at the stored partitioning
+        if (round == 2) {
+          assert(jobs == 1, s"'$q' ran $jobs jobs")
+          assert(tasks == 4, s"'$q' ran $tasks tasks")
+          assert(shuffleBytes == 0, s"'$q' shuffled $shuffleBytes bytes")
+        }
         assertSameHits(parsed(lines.toSeq),
           oracle.search(q, 10).map(h => (h.docId, h.score)), s"stored '$q'")
       }
     }
   }
 
+  test("each shard examines exactly its query terms' posting rows") {
+    val sfDir = documentsDir(CorpusGen.generate(spark, 300, 4).collect()
+      .map(_.content).toSeq)
+    val stored = Files.createTempDirectory("graft-rows").toString
+    IndexStore.write(IndexBuilder.build(SparkEntry.corpus(spark, sfDir),
+      IndexConfig(bucketBits = 4, indexPartitions = 3)), stored)
+    Seq("pinned" -> SparkEntry.index(spark, sfDir),
+      "stored" -> IndexStore.read(spark, stored)).foreach { case (handle, ix) =>
+      val n = ix.config.indexPartitions
+      Seq("computer science", "hash table NOT parse", "\"hash table\"",
+        "rareterm OR if").foreach { q =>
+        val terms = graft.query.QueryParser.parse(q).get.allTerms.distinct
+        // the query terms' rows per partition, counted from the index
+        // table under the shards' hash partitioning of bucket
+        val want = ix.index
+          .filter(col("field") === "body" && col("term").isin(terms: _*))
+          .groupBy(pmod(hash(col("bucket")), lit(n)).as("p")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1).toInt).toMap
+        val parts = graft.query.Wand.partitionHits(ix, q, 10, None)
+        assert(parts.map(_.partition).toSeq == (0 until n), s"$handle '$q'")
+        parts.foreach { p =>
+          assert(p.rowsExamined == want.getOrElse(p.partition, 0),
+            s"$handle '$q' partition ${p.partition}: examined " +
+              s"${p.rowsExamined} rows, the query terms have " +
+              s"${want.getOrElse(p.partition, 0)}")
+        }
+      }
+    }
+  }
+
+  /** A score rounded as the q_wand oracle rounds it. */
+  private def r4(x: Double): BigDecimal =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+
+  /** The q_wand oracle's rounded-tie rule: the served rounded scores are
+    * the pool's best k rounded scores, and each served hit belongs to
+    * the pool's class of its rounded score. */
+  private def obeysRoundedTieRule(got: Seq[(Long, Double)],
+      pool: Seq[(Long, Double)], k: Int): Boolean = {
+    val want = pool.map { case (d, s) => (d, r4(s)) }
+      .sortBy { case (d, s) => (-s, d) }
+    val g = got.map { case (d, s) => (d, r4(s)) }
+    g.size == math.min(k, want.size) && g.map(_._1).distinct.size == g.size &&
+      g.map(_._2) == want.take(g.size).map(_._2) &&
+      g.forall { case (d, s) => want.contains((d, s)) }
+  }
+
+  test("rounded ties wider than k at the cut obey the oracle's subset rule") {
+    // every document holds `tieword`, so its idf is tiny (~0.002) and
+    // a docLen step of one token moves a score by ~2e-6, far below the
+    // oracle's 4-place rounding: three leaders, then twelve docs whose
+    // exact scores differ but round to one class (docLen falls as docId
+    // rises, so exact order is the reverse of the oracle's docId
+    // tie-break), then the fillers; the class straddles the cut at k = 8
+    val k = 8
+    val leaders = Map(5 -> 300, 100 -> 301, 200 -> 302)
+    val ties = (0 until 12).map(i => (10 + 20 * i) -> (316 - 2 * i)).toMap
+    val texts = (0 until 256).map { d =>
+      val (tf, len) = leaders.get(d).map(3 -> _)
+        .orElse(ties.get(d).map(1 -> _)).getOrElse(1 -> 500)
+      (Seq.fill(tf)("tieword") ++ Seq.fill(len - tf)("pad")).mkString(" ")
+    }
+    val sfDir = documentsDir(texts)
+    val pool = oracleOf(sfDir)("tieword", Int.MaxValue)
+    val cut = r4(pool(k - 1)._2)
+    val cls = pool.filter(h => r4(h._2) == cut).map(_._1)
+    assert(cls.toSet == ties.keySet.map(_.toLong) && cls.size > k &&
+      pool.indexWhere(h => r4(h._2) == cut) < k, s"no tie class at the cut: $pool")
+
+    val stored = Files.createTempDirectory("graft-ties").toString
+    IndexStore.write(IndexBuilder.build(SparkEntry.corpus(spark, sfDir),
+      IndexConfig(bucketBits = 4, indexPartitions = 4)), stored)
+    val served = Seq(SparkEntry.index(spark, sfDir),
+      IndexStore.read(spark, stored)).map { ix =>
+      val parts = graft.query.Wand.partitionHits(ix, "tieword", k, None)
+      val fromParts = parts.filter(_.hits.exists(h => ties.contains(h.docId.toInt)))
+      assert(fromParts.length >= 2,
+        s"tie-class winners came from ${fromParts.length} partition(s)")
+      val got = graft.query.Wand.hits(ix, "tieword", k)
+        .map(h => (h.docId, h.score)).toSeq
+      assert(obeysRoundedTieRule(got, pool, k), s"$got against $pool")
+      // the exact order picks other class members than the docId
+      // tie-break would, so the rule, not equality, is what holds
+      assert(got.map(_._1) != pool.sortBy(h => (-r4(h._2), h._1)).take(k).map(_._1))
+      got
+    }
+    assert(served(0) == served(1), "pinned and stored handles disagree")
+  }
+
   test("store round-trip preserves the index (config + stats + rows)") {
     val ix = IndexStore.read(spark, dir)
     assert(ix.stats.nDocs == 200)
-    assert(ix.config.bucketBits == 5)
+    // every IndexConfig field, indexPartitions included
+    val written = IndexConfig(bucketBits = 5, indexPartitions = 4)
+    ix.config.productElementNames.zip(ix.config.productIterator)
+      .zip(written.productIterator).foreach { case ((name, got), want) =>
+        assert(got == want, s"config.$name")
+      }
     assert(ix.index.count() > 0 && ix.norms.count() > 0)
     // queries over the persisted index work end-to-end
     val hits = graft.query.Engine.search(ix, "computer science", 10).collect()
     assert(hits.nonEmpty)
+  }
+
+  test("a stats.json without indexPartitions reads with the default") {
+    val old = Files.createTempDirectory("graft-old-store").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir),
+      new java.io.File(old))
+    val statsPath = java.nio.file.Paths.get(s"$old/stats.json")
+    Files.writeString(statsPath, Files.readString(statsPath)
+      .replaceAll(",\"indexPartitions\":[0-9]+", ""))
+    assert(!Files.readString(statsPath).contains("indexPartitions"))
+    val ix = IndexStore.read(spark, old)
+    assert(ix.config == IndexConfig(bucketBits = 5))
+    assert(graft.query.Wand.hits(ix, "computer science", 10).nonEmpty)
+  }
+
+  test("IndexStore.write is byte-stable: the same tables give the same files") {
+    val built = IndexBuilder.build(
+      DocIds.assign(CorpusGen.generate(spark, 40, 2), 2),
+      IndexConfig(bucketBits = 3, indexPartitions = 16))
+    // cached, so both writes read the same rows in the same order. The
+    // range partitioner samples its boundaries with a seed drawn from
+    // the RDD id, which differs per write; these tables are small
+    // enough that its sample is the whole table, so the boundaries are
+    // fixed (larger tables can split differently). The norms keep
+    // several partitions, which the write must merge stably.
+    val ix = built.copy(index = built.index.cache(), docs = built.docs.cache(),
+      termStats = built.termStats.cache(), norms = built.norms.cache())
+    assert(ix.norms.rdd.getNumPartitions > 1)
+    val dirs = Seq.fill(2)(Files.createTempDirectory("graft-stable").toString)
+    dirs.foreach(IndexStore.write(ix, _))
+    def files(d: String): Seq[(String, Array[Byte])] = {
+      val root = java.nio.file.Paths.get(d)
+      val paths = Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(p => Files.isRegularFile(p) && {
+          val n = p.getFileName.toString
+          n.endsWith(".parquet") || n == "stats.json"
+        })
+      // part files are named part-<n>-<write uuid>-c000: key them by
+      // table and part number
+      paths.map { p =>
+        val rel = root.relativize(p).toString
+          .replaceAll("(part-[0-9]+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "$1")
+        rel -> Files.readAllBytes(p)
+      }.sortBy(_._1).toSeq
+    }
+    val (a, b) = (files(dirs(0)), files(dirs(1)))
+    assert(a.map(_._1) == b.map(_._1))
+    assert(a.exists(_._1.startsWith("norms/")) && a.exists(_._1.startsWith("index/")))
+    val differing = a.zip(b).collect {
+      case ((name, x), (_, y)) if !java.util.Arrays.equals(x, y) => name
+    }
+    assert(differing.isEmpty, "differ between two writes of the same tables")
+    Seq(ix.index, ix.docs, ix.termStats, ix.norms).foreach(_.unpersist())
   }
 
   test("docId assignment has no unpartitioned window (no global funnel)") {
