@@ -1,10 +1,12 @@
 package graft.index
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.index.codec.VarbyteFunctions.{encodeDelta, encodePlain}
+import graft.query.Shard
 
 /** Build configuration.
   *
@@ -152,11 +154,36 @@ final case class IndexTables(
     norms: DataFrame,
     stats: CorpusStats,
     config: IndexConfig) {
+  private[this] var servingShards: RDD[Shard] = _
+
   /** The BM25 executor's per-partition serving shards over these
     * tables, built by the first query and kept for the life of the
-    * handle. */
-  private[graft] lazy val shards: org.apache.spark.rdd.RDD[graft.query.Shard] =
-    graft.query.Shard.of(this)
+    * handle. Built under the handle's lock, so concurrent first queries
+    * wait for one build instead of racing its checkpoint. */
+  private[graft] def shards: RDD[Shard] = synchronized {
+    if (servingShards == null) servingShards = Shard.of(this)
+    servingShards
+  }
+
+  /** `query` (one Spark job) over the serving shards. If it fails and
+    * the shards' blocks are gone (an executor was lost, or they were
+    * unpersisted), their checkpoint cannot recompute them: the shards
+    * are rebuilt and the query retried once. Any other failure
+    * propagates. */
+  private[graft] def withShards[T](query: RDD[Shard] => T): T = {
+    val used = shards
+    try query(used)
+    catch {
+      case _: Exception if !Shard.intact(used) =>
+        synchronized {
+          if (servingShards eq used) {
+            used.unpersist(blocking = false)
+            servingShards = null
+          }
+        }
+        query(shards)
+    }
+  }
 }
 
 /** Inverted-index construction as declarative Dataset transforms.

@@ -451,8 +451,9 @@ object Similarity {
       nProbe: Int, coarseProbe: Int = 0, rerank: Int = 0): DataFrame = {
     val queries = ivf.assigned.filter(col("vecId").isin(queryIds: _*))
       .select(col("vecId").as("qid"), col("embedding").as("qvec"))
+    if (rerank > 0) return ivfProbePq(ivf, queries, k, nProbe, coarseProbe,
+      rerank)
     val probes = probeSet(ivf, queries, nProbe, coarseProbe)
-    if (rerank > 0) return ivfProbePq(ivf, probes, k, rerank)
     val scored = probes.join(ivf.assigned, "centroid")
       .filter(col("qid") =!= col("vecId"))
       .withColumn("cos", cosine(col("qvec"), col("embedding")))
@@ -720,8 +721,8 @@ object Similarity {
     * approx score = dot(q̂, leaf) + Σ_blocks LUT[block][code], top
     * rerank·k per query through the bounded-heap aggregate, exact
     * cosine re-scored ONLY for those against raw embeddings. */
-  private def ivfProbePq(ivf: IvfIndex, probes: DataFrame, k: Int,
-      rerank: Int): DataFrame = {
+  private def ivfProbePq(ivf: IvfIndex, queries: DataFrame, k: Int,
+      nProbe: Int, coarseProbe: Int, rerank: Int): DataFrame = {
     val pq = ivf.pq.getOrElse(throw new IllegalArgumentException(
       "ivfProbe(rerank > 0) needs a PQ layer: call buildPq on the index first"))
     val spark = ivf.assigned.sparkSession
@@ -729,21 +730,22 @@ object Similarity {
     val m = pq.m
     val dim = ivf.centroids.head._2.length
     val sub = dim / m
-    // ONE evaluation of the probe descent: `probes` is a multi-job
-    // coarse→leaf selection, and referencing the lazy frame three times
-    // (LUT collect, bucket join, re-rank queries) re-ran it three times.
-    // The probe set is bounded by construction (|batch| × nProbe rows),
-    // so collect it once and drive all three consumers from the rows —
-    // which also hands Catalyst an exactly-sized LocalRelation to
-    // broadcast against the big codes/assigned tables. float→double is
-    // exact, so rebuilding qvec as array<double> leaves every cosine
-    // bit-identical.
-    val probeRows = probes
-      .select(col("qid"), col("qvec").cast("array<double>").as("qv"),
-        col("centroid"))
-      .collect()
-    val qVecs: Seq[(Long, Seq[Double])] = probeRows
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).distinct.toSeq
+    // The query vectors (|batch| rows) and the probe set (|batch| ×
+    // nProbe rows) are bounded, so each is collected once and its
+    // consumers run from driver rows: the LUTs and both qid joins from
+    // the vectors, the bucket join from the (qid, centroid) pairs. A
+    // lazy probe frame would re-run its multi-job coarse→leaf descent
+    // per reference, and collecting it with its qvec column would ship
+    // each query vector once per probed centroid. float→double is
+    // exact, so every cosine stays bit-identical.
+    val qVecs: Seq[(Long, Seq[Double])] = queries
+      .select(col("qid"), col("qvec").cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).distinct.toSeq
+    val queryDf = qVecs.toDF("qid", "qvec")
+    val probeDf = probeSet(ivf, queryDf, nProbe, coarseProbe)
+      .select(col("qid"), col("centroid")).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+      .toDF("qid", "centroid")
     val luts: Seq[(Long, Seq[Seq[Double]])] = qVecs.map { case (qid, qv) =>
       val qn = normalizeDriver(qv.toArray)
       val lut = (0 until m).map { b =>
@@ -758,11 +760,9 @@ object Similarity {
     }
     val lutDf = luts.toDF("qid", "lut")
     val leafDf = ivf.centroids.toDF("centroid", "cvec")
-    val probeDf = probeRows
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getInt(2))).toSeq
-      .toDF("qid", "qvec", "centroid")
     val approx = probeDf.join(broadcast(leafDf), "centroid")
       .join(broadcast(lutDf), "qid")
+      .join(broadcast(queryDf), "qid")
       .join(pq.codes, Seq("centroid"))
       .filter(col("qid") =!= col("vecId"))
       .select(col("qid"),
@@ -772,10 +772,9 @@ object Similarity {
           .as("cos"),
         col("vecId"))
     val cands = topIdsByQid(approx, rerank * k, "vecId")
-    val queries = qVecs.toDF("qid", "qvec")
     val exact = cands
       .join(ivf.assigned.select(col("vecId"), col("embedding")), "vecId")
-      .join(broadcast(queries), "qid")
+      .join(broadcast(queryDf), "qid")
       .withColumn("cos", cosine(col("qvec"), col("embedding")))
     topKByQid(exact, k)
   }

@@ -80,11 +80,14 @@ private[graft] object Shard {
   }
 
   /** The serving shards of a handle, one per partition of its
-    * [[IndexBuilder.bucketPartitioned]] index, norms and docs, persisted
-    * (built by the first query that reads them). On a handle pinned
+    * [[IndexBuilder.bucketPartitioned]] index, norms and docs, persisted,
+    * local-checkpointed and materialized here. On a handle pinned
     * co-partitioned (`SparkEntry.index`) the rows come from the cached
     * tables; on any other handle, e.g. `IndexStore.read`, the bucket
-    * repartition runs once, here. */
+    * repartition runs once, here. The checkpoint cuts the lineage, so a
+    * query's task carries a one-level RDD instead of the plan that
+    * built the tables; the price is that lost blocks cannot be
+    * recomputed (see [[intact]]). */
   def of(ix: IndexTables): RDD[Shard] = {
     def rows(df: DataFrame, cols: String*): RDD[InternalRow] =
       IndexBuilder.bucketPartitioned(df.select(cols.map(col): _*), ix.config)
@@ -93,15 +96,24 @@ private[graft] object Shard {
       .elementType.asInstanceOf[StructType]
     val maxDocIdAt = blockType.fieldIndex("maxDocId")
     val blockMaxAt = blockType.fieldIndex("blockMax")
-    rows(ix.index, "field", "term", "bucket", "n", "docIds", "tfs", "blocks",
-      "rowMax", "positions")
+    val shards = rows(ix.index, "field", "term", "bucket", "n", "docIds",
+      "tfs", "blocks", "rowMax", "positions")
       .zipPartitions(rows(ix.norms, "bucket", "docIds", "docLens"),
         rows(ix.docs, "docId", "repo", "path")) { (p, n, d) =>
         Iterator(build(p, n, d, maxDocIdAt, blockMaxAt))
       }
       .setName("serving shards")
       .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
+    shards.count()
+    shards
   }
+
+  /** Whether every partition of `shards` is still in storage: false
+    * once an executor holding one is lost or they are unpersisted. */
+  def intact(shards: RDD[Shard]): Boolean =
+    shards.sparkContext.getRDDStorageInfo.exists(r =>
+      r.id == shards.id && r.numCachedPartitions == r.numPartitions)
 
   /** One posting row copied out of the (reused) scan row. */
   private final class Posting(val field: String, val term: String,

@@ -429,7 +429,7 @@ object Wand {
     val avgdl = ix.stats.avgDocLen
     val codec = graft.index.codec.PostingCodec(ix.config.codec)
 
-    ix.shards.mapPartitionsWithIndex { (partition, shards) =>
+    ix.withShards(_.mapPartitionsWithIndex { (partition, shards) =>
       shards.map { s =>
         // the dictionary probe: this shard's rows of the query's terms
         val found = allTs.flatMap(t => s.rowsOf(field, t).map(t -> _))
@@ -483,6 +483,6 @@ object Wand {
         }.toArray
         PartitionHits(partition, found.size, positionsDecoded, winners)
       }
-    }.collect()
+    }.collect())
   }
 }

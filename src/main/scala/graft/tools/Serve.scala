@@ -88,9 +88,14 @@ object Serve {
     *     `{"results":[{docId,score,repo,path}...]}`
     *   `GET /api/snippets?ids=1,2,3` →
     *     `{"results":[{docId,snippet}...]}`
-    * JDK built-in httpserver; queries run on the handler pool (Spark
-    * handles concurrent actions from multiple threads). Returns the
-    * bound server (caller stops it). */
+    * JDK built-in httpserver; queries run on a pool of 8 daemon
+    * handler threads, `graft-http-N` (Spark handles concurrent actions
+    * from multiple threads). Accepted sockets get TCP_NODELAY: the
+    * server writes a reply's headers and body as two segments, and with
+    * Nagle on the body waits for the client's delayed ACK, about 40 ms
+    * a reply. The JDK reads that setting once, when the JVM creates its
+    * first HttpServer. Returns the bound server (caller stops it; its
+    * idle handler threads do not keep the JVM alive). */
   def startHttp(ix: graft.index.IndexTables,
       corpus: org.apache.spark.sql.DataFrame, port: Int,
       defaultScorer: String = "wand",
@@ -125,6 +130,7 @@ object Serve {
           try os.write(bytes) finally os.close()
         }
       }
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
     server.createContext("/api/search", handler { params =>
       val q = params.getOrElse("q", "")
@@ -137,7 +143,13 @@ object Serve {
         .flatMap(_.trim.toLongOption).toSeq
       snippetsJson(corpus, ids).mkString("""{"results":[""", ",", "]}")
     })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8,
+      { (r: Runnable) =>
+        val t = new Thread(r, s"graft-http-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }))
     server.start()
     server
   }

@@ -15,10 +15,11 @@ import graft.tools.Serve
   * path. */
 class HttpServeSpec extends SparkSpec {
 
+  lazy val corpus = DocIds.assign(CorpusGen.generate(spark, 250, 4), 4)
+  lazy val ix = IndexBuilder.build(corpus,
+    IndexConfig(bucketBits = 6, indexPartitions = 4))
+
   test("HTTP /api/search + /api/snippets: JSON shape, scorers, concurrency") {
-    val corpus = DocIds.assign(CorpusGen.generate(spark, 250, 4), 4)
-    val ix = IndexBuilder.build(corpus,
-      IndexConfig(bucketBits = 6, indexPartitions = 4))
     val server = Serve.startHttp(ix, corpus, 0) // ephemeral port
     try {
       val port = server.getAddress.getPort
@@ -130,6 +131,44 @@ class HttpServeSpec extends SparkSpec {
           Future(get("/api/search?q=hash%20table&k=3")))), 120.seconds)
       assert(bodies.toSet.size == 1 && bodies.head.contains("docId"))
     } finally server.stop(0)
+  }
+
+  test("replies are not held for a delayed ACK: keep-alive median < 15 ms") {
+    // a route that runs no Spark job: what is left is the server's own
+    // cost, well under a millisecond, unless Nagle holds each reply's
+    // body until the client's delayed ACK of its headers (40 ms floor)
+    val server = Serve.startHttp(ix, corpus, 0)
+    try {
+      val client = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build() // one kept-alive connection
+      val req = HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${server.getAddress.getPort}/api/snippets?ids="))
+        .GET().build()
+      val ms = (1 to 20).map { _ =>
+        val t = System.nanoTime()
+        val body = client.send(req, HttpResponse.BodyHandlers.ofString()).body()
+        assert(body == """{"results":[]}""", body)
+        (System.nanoTime() - t) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 15, s"request latencies, ms: ${ms.mkString(" ")}")
+    } finally server.stop(0)
+  }
+
+  test("a stopped server leaves no non-daemon handler threads") {
+    import scala.jdk.CollectionConverters._
+    def handlers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-http-"))
+    val server = Serve.startHttp(ix, corpus, 0)
+    try {
+      val client = HttpClient.newHttpClient()
+      val req = HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${server.getAddress.getPort}/api/snippets?ids="))
+        .GET().build()
+      (1 to 3).foreach(_ => client.send(req, HttpResponse.BodyHandlers.ofString()))
+      assert(handlers.nonEmpty, "requests ran on no graft-http thread")
+    } finally server.stop(0)
+    assert(handlers.forall(_.isDaemon),
+      s"non-daemon handler threads: ${handlers.filterNot(_.isDaemon).mkString(", ")}")
   }
 
   test("http mode rejects a malformed port before loading the index") {

@@ -211,6 +211,68 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("serving shards are lineage-free: a small task binary, one job a query") {
+    val sc = spark.sparkContext
+    val sfDir = documentsDir(CorpusGen.generate(spark, 240, 4).collect()
+      .map(_.content).toSeq)
+    Seq("pinned" -> SparkEntry.index(spark, sfDir),
+      "stored" -> IndexStore.read(spark, dir)).foreach { case (handle, ix) =>
+      val before = sc.getPersistentRDDs.keySet
+      // what every query task deserializes of its input: the shards RDD
+      // with whatever lineage it still has
+      val bytes = org.apache.spark.SparkEnv.get.closureSerializer
+        .newInstance().serialize(ix.shards).limit()
+      assert(bytes < 8192, s"$handle shards serialize to $bytes bytes")
+      val dfs = Some(graft.query.Wand.dfDictionary(ix))
+      val q = "hash table NOT parse"
+      graft.tools.Serve.searchJson(ix, q, 10, "wand", dfs)
+      val (_, jobs, tasks, shuffleBytes) =
+        anatomy(graft.tools.Serve.searchJson(ix, q, 10, "wand", dfs))
+      assert(jobs == 1, s"$handle '$q' ran $jobs jobs")
+      assert(tasks == ix.config.indexPartitions, s"$handle '$q' ran $tasks tasks")
+      assert(shuffleBytes == 0, s"$handle '$q' shuffled $shuffleBytes bytes")
+      assert(sc.getPersistentRDDs.keySet -- before == Set(ix.shards.id),
+        s"$handle: ${sc.getPersistentRDDs.values.mkString("\n")}")
+    }
+  }
+
+  test("lost serving shards are rebuilt and the query retried once") {
+    val ix = IndexStore.read(spark, dir)
+    val oracle = graft.oracle.BruteForce.index(
+      (0L until 200).map(CorpusGen.genDoc))
+    val q = "computer science"
+    def answer(): Unit = assertSameHits(
+      parsed(graft.tools.Serve.searchJson(ix, q, 10, "bm25", None).toSeq),
+      oracle.search(q, 10).map(h => (h.docId, h.score)), s"stored '$q'")
+    answer()
+    // the shards' blocks go, as on executor loss: the checkpoint cannot
+    // recompute them, so the first run fails and the rerun is on new ones
+    val lost = ix.shards
+    lost.unpersist(blocking = true)
+    var runs = 0
+    assert(ix.withShards { s => runs += 1; s.count() } ==
+      ix.config.indexPartitions)
+    assert(runs == 2)
+    val rebuilt = ix.shards
+    assert((rebuilt ne lost) && graft.query.Shard.intact(rebuilt))
+    rebuilt.unpersist(blocking = true)
+    answer()
+    assert(graft.query.Shard.intact(ix.shards))
+  }
+
+  test("a query that fails on intact serving shards is not retried") {
+    val ix = IndexStore.read(spark, dir)
+    val shards = ix.shards
+    var runs = 0
+    val e = intercept[org.apache.spark.SparkException](ix.withShards { s =>
+      runs += 1
+      s.foreach(_ => throw new IllegalStateException("a query bug"))
+    })
+    assert(e.getMessage.contains("a query bug"), e.getMessage)
+    assert(runs == 1)
+    assert(ix.shards eq shards)
+  }
+
   test("each shard examines exactly its query terms' posting rows") {
     val sfDir = documentsDir(CorpusGen.generate(spark, 300, 4).collect()
       .map(_.content).toSeq)

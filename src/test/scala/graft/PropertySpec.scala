@@ -226,4 +226,77 @@ class PropertySpec extends SparkSpec {
     assert(df.columns.toSeq == Seq("docId", "score", "repo", "path"))
     assert(df.count() == 0)
   }
+
+  test("redaction chain fuzz: counts, spans and re-redaction agree") {
+    import spark.implicits._
+    import graft.ops.TextAnalysis.{RedactPatterns, RedactToken, redact, redactSpans}
+    val r = new scala.util.Random(11)
+    def pick[T](xs: T*): T = xs(r.nextInt(xs.size))
+    def chars(alphabet: String, n: Int): String =
+      Seq.fill(n)(alphabet(r.nextInt(alphabet.length))).mkString
+    def hex(n: Int) = chars("0123456789abcdef", n)
+    def aws() = "AKIA" + chars("0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ", 16)
+    def assign(value: String) = {
+      val q = pick("'", "\"")
+      pick("password", "PASSWD", "Secret", "api_key", "apikey", "token") +
+        pick("=", ":", " = ", "\t:") + q + value + q
+    }
+    def pem(terminated: Boolean) = {
+      val kind = pick("", "RSA ", "EC ", "OPENSSH ")
+      val body = Seq.fill(r.nextInt(3))(pick(hex(40), aws(), "MIIBog"))
+      val end = Option.when(terminated)(s"-----END ${kind}PRIVATE KEY-----")
+      ((s"-----BEGIN ${kind}PRIVATE KEY-----" +: body) ++ end).mkString("\n")
+    }
+    // a credential shape, alone, adjacent to another, or containing one
+    def secret(): String = r.nextInt(8) match {
+      case 0 => aws()
+      case 1 => hex(32 + r.nextInt(40))
+      case 2 => assign(pick(chars("abcXYZ09_-", 4 + r.nextInt(8)), aws(),
+        hex(32), "k" + hex(33)))
+      case 3 => pem(r.nextBoolean())
+      case 4 => aws() + hex(32 + r.nextInt(8))
+      case 5 => hex(32) + aws() + hex(32)
+      case 6 => assign(hex(4)) + assign(aws())
+      case _ => pem(true) + pem(false)
+    }
+    // near-misses, non-ASCII (one outside the BMP) and separators
+    def filler() = Seq.fill(r.nextInt(6))(pick("the", "hash", "é", "日本",
+      "\uD83D\uDE00", "x=1", "'", "\"", "AKIA", "deadbeef", "token=",
+      "-----BEGIN", RedactToken)).mkString(pick(" ", "", "\n"))
+    val texts = Seq.fill(300) {
+      Seq.fill(1 + r.nextInt(5))(if (r.nextInt(3) == 0) filler() else secret())
+        .mkString(pick("", "", " ", "\n"))
+    } ++ Seq(aws(), hex(32), assign("abcd"), pem(true), pem(false), "")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+
+    val redacted = redact(docs, "doc_id", "text").collect()
+      .map(row => row.getLong(0) -> (row.getString(1), row.getInt(2))).toMap
+    val spans = redactSpans(docs, "doc_id", "text").collect()
+      .map(row => (row.getLong(0), row.getInt(1), row.getInt(2),
+        row.getLong(3).toInt, row.getLong(4).toInt))
+      .groupBy(_._1)
+    val patterns = RedactPatterns.map(java.util.regex.Pattern.compile(_))
+    texts.zipWithIndex.foreach { case (text, i) =>
+      val mine = spans.getOrElse(i.toLong, Array.empty)
+      assert(redacted(i.toLong)._2 == mine.length,
+        s"doc $i: nRedactions ${redacted(i.toLong)._2}, ${mine.length} spans")
+      // stage p's text is the text as patterns 1..p-1 left it; offsets
+      // count code points
+      val stages = RedactPatterns.scanLeft(text)(_.replaceAll(_, RedactToken))
+      mine.foreach { case (_, pat, idx, from, until) =>
+        val st = stages(pat - 1)
+        val slice = st.substring(st.offsetByCodePoints(0, from),
+          st.offsetByCodePoints(0, until))
+        assert(patterns(pat - 1).matcher(slice).matches(),
+          s"doc $i pattern $pat match $idx: '$slice' at $from..$until of '$st'")
+      }
+    }
+    // redacted content has nothing left to redact
+    val again = redact(redacted.toSeq.map { case (i, (c, _)) => (i, c) }
+      .toDF("doc_id", "text"), "doc_id", "text").collect()
+    again.foreach(row => assert(row.getInt(2) == 0,
+      s"doc ${row.getLong(0)} re-redacted ${row.getInt(2)} more times: " +
+        row.getString(1)))
+  }
 }
