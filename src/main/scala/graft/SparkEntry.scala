@@ -64,13 +64,9 @@ object SparkEntry {
         norms = pin(IndexBuilder.buildNorms(docs, cfg)))
       // materialize the four tables concurrently: each count is a few
       // short stages, so the jobs overlap their scheduling and planning
-      // latency (the pool's threads inherit the caller's job group)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      try Seq(ix.index, ix.docs, ix.termStats, ix.norms)
-        .map(t => pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = t.count() }))
-        .foreach(_.get())
-      finally pool.shutdown()
+      // latency
+      Jobs.concurrently(Seq(ix.index, ix.docs, ix.termStats, ix.norms)
+        .map(t => () => t.count()))
       release()
       ix
     })
@@ -471,8 +467,8 @@ object SparkEntry {
     // (1-(1-J^4)^32 ≈ 0.988 at the boundary). Deterministic here —
     // signatures are seeded and the planted near-dup families sit well
     // above threshold — but new testdata planting a pair at J ≈ 0.60
-    // could legitimately be missed; the fix then is recall-floor
-    // verification (the ANN specs' pattern), not a code change.
+    // could legitimately be missed; OpsSpec "minhash LSH recall floor at
+    // the 0.6 boundary; nothing below it" guards that floor (≥ 95 %).
     "q_dedup_minhash" -> ((s, d) =>
       Dedup.minhashLshPairs(documents(s, d), "doc_id", "text", 3, 128, 32, 0.6)
         .orderBy("a", "b")),

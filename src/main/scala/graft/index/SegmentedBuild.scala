@@ -29,6 +29,13 @@ import graft.index.codec.VarbyteFunctions._
   * group holds disjoint sorted runs across segments, so the merge is a
   * sorted-run concatenation (associative + commutative + idempotent —
   * the properties resumability needs).
+  *
+  * Like the crawler nodes' chunks, the segments a [[build]] finds
+  * missing are written concurrently (`graft.Jobs.concurrently`): one at
+  * a time, each one's small write stage left most cores idle. The build
+  * waits for every segment before it rethrows the first failure; the
+  * finished ones keep their lineage records (written last), so a rerun
+  * rebuilds only the failed ones.
   */
 object SegmentedBuild {
 
@@ -170,14 +177,15 @@ object SegmentedBuild {
 
   /** Full resumable build: global docs phase (cheap, rerun each time —
     * at production scale this would be a checkpointed table too),
-    * per-segment postings with lineage skip, assemble, persist. */
+    * the missing segments' postings as concurrent jobs (done segments
+    * skipped by their lineage), assemble, persist. */
   def build(corpusWithDocId: DataFrame, dir: String, nSegments: Int,
       cfg: IndexConfig = IndexConfig()): IndexTables = {
     val docs = IndexBuilder.buildDocs(corpusWithDocId)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (0 until nSegments).foreach { s =>
-      buildSegment(corpusWithDocId, dir, s, nSegments, cfg)
-    }
+    graft.Jobs.concurrently((0 until nSegments)
+      .filterNot(segmentDone(dir, _, nSegments, cfg.bucketBits, cfg.codec))
+      .map(s => () => buildSegment(corpusWithDocId, dir, s, nSegments, cfg)))
     val t = assemble(corpusWithDocId.sparkSession, dir, docs, cfg,
       Some((0 until nSegments).map(_.toString)))
     IndexStore.write(t, dir)

@@ -79,12 +79,52 @@ class EngineParitySpec extends SparkSpec {
     }
   }
 
+  /** `DocIds.assign(files, partitions)` as (docId, repo, path, commit)
+    * in docId order, after asserting its layout: each output partition
+    * holds one contiguous, ascending docId range, and the ranges follow
+    * partition order. */
+  def assignedIds(files: Seq[RepoFile], partitions: Int)
+      : Seq[(Long, String, String, String)] = {
+    val assigned = DocIds.assign(spark.createDataset(files)
+      .repartition(5), partitions)
+    val perPartition = assigned.rdd.glom().collect().toSeq
+      .map(_.map(r => r.getLong(0)).toSeq)
+    perPartition.filter(_.nonEmpty).foreach { ids =>
+      assert(ids == (ids.head until ids.head + ids.size),
+        s"partition ids not one contiguous ascending range: $ids")
+    }
+    assert(perPartition.flatten == (0L until files.size),
+      s"partitions=$partitions")
+    assigned.select("docId", "repo", "path", "commit").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+      .sortBy(_._1).toSeq
+  }
+
   test("docId assignment matches oracle dense rank") {
     val got = ix.docs.select("docId", "repo", "path")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
     val want = oracle.docs.map(d => (d.docId, d.file.repo, d.file.path))
     assert(got.toSeq == want)
+    // the ids do not depend on the partition count
+    val byRank = oracle.docs.map(d =>
+      (d.docId, d.file.repo, d.file.path, d.file.commit))
+    Seq(1, 3, 8).foreach(p => assert(assignedIds(files, p) == byRank, s"partitions=$p"))
+  }
+
+  test("docId assignment on a skewed, shared-prefix corpus") {
+    // every repo shares its first 12 chars and one repo holds ~40 % of
+    // the files; some paths come in two commits, so commit breaks ties
+    val rnd = new scala.util.Random(7)
+    val files = (0 until 600).map { i =>
+      val repo = if (i % 5 < 2) "github.com/a/big" else f"github.com/a/r${rnd.nextInt(30)}%02d"
+      RepoFile(repo, s"src/f${rnd.nextInt(200)}.scala", f"${i % 3}%040d",
+        "scala", s"object F$i")
+    }.distinctBy(f => (f.repo, f.path, f.commit))
+    assert(files.count(_.repo == "github.com/a/big").toDouble / files.size > 0.35)
+    val want = files.sortBy(f => (f.repo, f.path, f.commit)).zipWithIndex
+      .map { case (f, i) => (i.toLong, f.repo, f.path, f.commit) }
+    Seq(1, 3, 8).foreach(p => assert(assignedIds(files, p) == want, s"partitions=$p"))
   }
 
   test("per-row content sha256 equality (north-rule invariant)") {

@@ -46,6 +46,58 @@ class OpsSpec extends SparkSpec {
     assert(lsh == exact)
   }
 
+  test("minhash LSH recall floor at the 0.6 boundary; nothing below it") {
+    // pair p is two docs of 102 distinct tokens that share their first
+    // 2 + c tokens: 100 3-shingles each, c shared, J = c / (200 - c)
+    // exactly. Tokens are unique per pair, so no other pair shares one.
+    def pair(p: Int, c: Int): Seq[(Long, String)] = {
+      def doc(side: Int) = ((0 until 2 + c).map(i => s"p${p}s$i") ++
+        (0 until 100 - c).map(i => s"p${p}d${side}x$i")).mkString(" ")
+      Seq((2L * p, doc(0)), (2L * p + 1, doc(1)))
+    }
+    def jaccard(c: Int) = c.toDouble / (200 - c)
+    // c in 76..79: J in [0.613, 0.653]; c in 63..70: J in [0.460, 0.538]
+    val near = (0 until 120).map(p => p -> (76 + p % 4))
+    val below = (120 until 240).map(p => p -> (63 + p % 8))
+    assert(near.forall { case (_, c) => jaccard(c) >= 0.60 && jaccard(c) <= 0.66 })
+    assert(below.forall { case (_, c) => jaccard(c) >= 0.45 && jaccard(c) <= 0.55 })
+    val planted = (near ++ below).flatMap { case (p, c) => pair(p, c) }
+      .toDF("doc_id", "text")
+    val found = Dedup.minhashLshPairs(planted, "doc_id", "text", 3, 128, 32, 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val nearPairs = near.map { case (p, c) => (2L * p, 2L * p + 1) -> c }.toMap
+    // theory at J = 0.6: 1 - (1 - 0.6^4)^32 = 0.988
+    val recall = nearPairs.keys.count(found.contains).toDouble / nearPairs.size
+    assert(recall >= 0.95, s"recall $recall at J in [0.60, 0.66]")
+    // every pair returned is a planted near pair, with its exact Jaccard
+    found.foreach { case (ab, j) =>
+      assert(nearPairs.contains(ab), s"pair $ab below the threshold returned")
+      assert(j == BigDecimal(jaccard(nearPairs(ab)))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, s"jaccard of $ab")
+    }
+  }
+
+  test("keepCanonical keeps exactly each component's minimum (random graphs)") {
+    (1 to 3).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((0L until 120L).toVector)
+      val chain = ids.slice(0, 12).sliding(2).map(w => (w(0), w(1))).toSeq
+      val star = ids.slice(13, 20).map(v => (ids(12), v))
+      val cycle = ids.slice(20, 28)
+      val cyc = cycle.zip(cycle.tail :+ cycle.head)
+      val random = Seq.fill(40)((ids(28 + rnd.nextInt(60)), ids(28 + rnd.nextInt(60))))
+      // ids(88 until 120) stay isolated: in the docs, in no pair
+      val edges = chain ++ star ++ cyc ++ random
+      val pairs = edges ++ edges.take(10) ++ edges.takeRight(10).map(_.swap)
+      val docs = (0L until 120L).toDF("doc_id")
+      val kept = Dedup.keepCanonical(docs, "doc_id", rnd.shuffle(pairs).toDF("a", "b"))
+        .collect().map(_.getLong(0)).toSet
+      val rep = bruteCC(edges)
+      val want = (0L until 120L).filter(i => rep.getOrElse(i, i) == i).toSet
+      assert(kept == want, s"seed $seed")
+    }
+  }
+
   test("simhash: identical docs at hamming 0; unrelated docs absent") {
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1),
